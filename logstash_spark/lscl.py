@@ -151,8 +151,9 @@ class _Parser:
         block opener and break the parse. Comments between condition
         and '{' are skipped."""
         k, _, start = self.peek()
-        if k is None:
-            raise LsclError("unterminated condition")
+        if k is None:  # input ended right after `if`
+            raise LsclError(
+                f"unterminated condition at offset {len(self.text)}")
         text, n = self.text, len(self.text)
         buf: list[str] = []
         i = start
@@ -182,10 +183,10 @@ class _Parser:
             buf.append(c)
             i += 1
         else:
-            raise LsclError("unterminated condition")
+            raise LsclError(f"unterminated condition at offset {start}")
         cond = "".join(buf).strip()
         if not cond:
-            raise LsclError("empty condition")
+            raise LsclError(f"empty condition at offset {start}")
         # re-sync the token cursor to the first token at/after the '{'
         while self.peek()[0] is not None and self.peek()[2] < i:
             self.next()

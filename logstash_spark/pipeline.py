@@ -78,12 +78,12 @@ class Pipeline:
         equivalent). Cardinality/shape-changing stages keep the branch
         lowering but persist the upstream first so it executes once;
         those persists are released by ``release_branch_caches()``
-        (pipeline.run calls it after each batch).
+        (execute_batch calls it after each batch).
         """
         df = ensure_tags(df)
         # a second compile() on the same Pipeline must not orphan the
         # previous call's branch persists (library callers may compile
-        # without run(); run() also releases after each batch)
+        # without execute_batch(), which releases after each batch)
         self.release_branch_caches()
         for when, stage in self.stages:
             if when is None:
@@ -157,9 +157,7 @@ class Pipeline:
                                   ignore_errors=True)
         completed = manifest.completed_batches()
 
-        bucketed = source.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets))
-        )
+        bucketed = _with_bucket(source, bucket_on, n_buckets)
 
         groups: list[list[int]] = [[] for _ in range(n_batches)]
         for b in range(n_buckets):
@@ -201,87 +199,98 @@ class Pipeline:
                         "input, or start fresh (resume=False)")
 
         total = PipelineMetrics(self.id)
-        stage_tags = self._stage_failure_tags()
-
         for batch_id, buckets in enumerate(groups):
-            if batch_id in completed:
-                total = total.merge(_metrics_from_manifest(self.id, completed[batch_id]))
-                continue
-            t0 = time.monotonic()
-            batch_src = (
-                bucketed.filter(F.col(BUCKET_COL).isin(buckets))
-                if n_batches > 1
-                else bucketed
-            )
-            obs = Observation(f"in_{batch_id}")
-            batch_src = batch_src.observe(obs, F.count(F.lit(1)).alias("events_in"))
-            # One shuffle on the bucket key before the multi-sink fan-out:
-            # without it every task writes into every bucket directory of
-            # every sink (tasks x buckets x sinks tiny files — measured to
-            # INVERT scaling at local[32]). With it each bucket is one
-            # task's output file per sink, and the persisted layout is
-            # co-located with the checkpoint/ack unit. The shuffle carries
-            # only post-parse columns (html is projected away by the
-            # extract stage before this point).
-            compiled = self.compile(batch_src)
-            if BUCKET_COL not in compiled.columns:
-                raise ValueError(
-                    f"a filter removed the internal {BUCKET_COL!r} column "
-                    "(remove_field / prune whitelist?) — it must survive "
-                    "to the sinks: it is the partition key of the "
-                    "checkpointed idempotent bucket-overwrite contract")
-            routed = (
-                compiled
-                .repartition(len(buckets), F.col(BUCKET_COL))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                # ONE materializing agg: total row count + per-stage failure
-                # counts (fills the cache; separate count() jobs removed)
-                filtered_count, failure_counts = _failure_census(routed, stage_tags)
-                in_count = int(obs.get["events_in"])
-                sink_counts = self.router.write_batch(
-                    routed, run_dir,
+            entry = completed.get(batch_id)
+            if entry is None:
+                batch_src = (
+                    bucketed.filter(F.col(BUCKET_COL).isin(buckets))
+                    if n_batches > 1
+                    else bucketed
+                )
+                entry = self.execute_batch(
+                    batch_src, run_dir, len(buckets),
                     truncate_tables=(not resume) and batch_id == 0)
-            finally:
-                routed.unpersist()
-                self.release_branch_caches()
-            duration_ms = int((time.monotonic() - t0) * 1000)
-
-            m = PipelineMetrics(self.id)
-            m.events_in = in_count
-            m.events_filtered = filtered_count
-            m.events_out = sum(sink_counts.values())
-            m.duration_in_millis = duration_ms
-            m.sinks = sink_counts
-            m.filters = [
-                StageMetrics(sid, in_count, filtered_count, failure_counts.get(sid, 0))
-                for sid in stage_tags
-            ]
-            manifest.ack(
-                batch_id,
-                {
-                    "buckets": buckets,
-                    "events": {
-                        "in": m.events_in,
-                        "filtered": m.events_filtered,
-                        "out": m.events_out,
-                        "duration_in_millis": duration_ms,
-                    },
-                    "sinks": sink_counts,
-                    "failures": failure_counts,
-                    "lineage": {"source": _describe_source(source),
-                                "run_dir": run_dir,
-                                "bucket_on": bucket_on,
-                                "n_buckets": n_buckets},
-                },
-            )
-            total = total.merge(m)
-            if _fail_after_batch is not None and batch_id >= _fail_after_batch:
-                raise RuntimeError(f"simulated crash after batch {batch_id}")
+                entry["buckets"] = buckets
+                entry["lineage"] = {"source": _describe_source(source),
+                                    "run_dir": run_dir,
+                                    "bucket_on": bucket_on,
+                                    "n_buckets": n_buckets}
+                manifest.ack(batch_id, entry)
+                if _fail_after_batch is not None and batch_id >= _fail_after_batch:
+                    raise RuntimeError(f"simulated crash after batch {batch_id}")
+            total = total.merge(_metrics_from_manifest(self.id, entry))
 
         total.write(f"{run_dir}/metrics.json")
         return total
+
+    def execute_batch(
+        self,
+        df: DataFrame,
+        run_dir: str,
+        n_partitions: int,
+        mode: str = "overwrite",
+        truncate_tables: bool = False,
+    ) -> dict:
+        """Run one micro-batch of an already bucketed frame through the
+        chain and the sinks; the one per-batch body of both batch
+        (``run``) and streaming (``streaming.run_streaming``) mode.
+
+        Returns the batch record: ``{"events": {in, filtered, out,
+        duration_in_millis}, "sinks", "failures"}``.
+        """
+        t0 = time.monotonic()
+        # events.in is the PRE-compile ingress count (node-stats
+        # semantics): a drop/split filter changes the post-compile
+        # count, which is events.filtered
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("events_in"))
+        # One shuffle on the bucket key before the multi-sink fan-out:
+        # without it every task writes into every bucket directory of
+        # every sink (tasks x buckets x sinks tiny files — measured to
+        # INVERT scaling at local[32]). With it each bucket is one
+        # task's output file per sink, and the persisted layout is
+        # co-located with the checkpoint/ack unit. The shuffle carries
+        # only post-parse columns (html is projected away by the
+        # extract stage before this point).
+        compiled = self.compile(df)
+        if BUCKET_COL not in compiled.columns:
+            raise ValueError(
+                f"a filter removed the internal {BUCKET_COL!r} column "
+                "(remove_field / prune whitelist?) — it must survive "
+                "to the sinks: it is the partition key of the "
+                "checkpointed idempotent bucket-overwrite contract")
+        routed = (
+            compiled
+            .repartition(n_partitions, F.col(BUCKET_COL))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        try:
+            # ONE materializing agg: total row count + per-stage failure
+            # counts (fills the cache; separate count() jobs removed)
+            filtered, failures = _failure_census(
+                routed, self._stage_failure_tags())
+            sinks = self.router.write_batch(
+                routed, run_dir, mode=mode, truncate_tables=truncate_tables)
+        finally:
+            routed.unpersist()
+            self.release_branch_caches()
+        return {
+            "events": {
+                "in": int(obs.get["events_in"]),
+                "filtered": filtered,
+                "out": sum(sinks.values()),
+                "duration_in_millis": int((time.monotonic() - t0) * 1000),
+            },
+            "sinks": sinks,
+            "failures": failures,
+        }
+
+
+def _with_bucket(df: DataFrame, bucket_on: str, n_buckets: int) -> DataFrame:
+    """Add the url-hash ``bucket`` column: the partition key of every
+    sink and the unit a batch's buckets are grouped by."""
+    return df.withColumn(
+        BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets)))
 
 
 _COND = "__when_cond"

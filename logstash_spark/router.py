@@ -18,6 +18,10 @@ Spark decisions:
   reference's Dataset#compute memoization corresponds to (SURVEY §4).
 * Sinks write parquet partitioned by the ``bucket`` column with dynamic
   partition overwrite → idempotent per-bucket writes (resume story).
+  The mode is a per-write option (path sinks) or a table option set
+  when the engine creates a catalog table, so it holds whatever the
+  session's ``spark.sql.sources.partitionOverwriteMode`` says, and the
+  session conf is never touched.
 """
 
 from __future__ import annotations
@@ -40,12 +44,8 @@ def failure_tag_predicate(df: DataFrame) -> Column:
         return F.lit(False)
     return F.exists(F.col(TAGS_FIELD), lambda t: t.endswith("failure") | t.endswith("_miss"))
 
-
-# write_batch's partitionOverwriteMode pin is depth-counted per session
-# (see write_batch) — module-level so concurrent Router instances on the
-# same session coordinate
-_MODE_PIN_LOCK = threading.Lock()
-_MODE_PIN: dict[int, tuple[int, str | None]] = {}
+# the per-write/table option that makes an overwrite bucket-scoped
+_OVERWRITE_MODE_KEY = "partitionOverwriteMode"
 
 
 @dataclass
@@ -166,19 +166,21 @@ def _write_catalog_table(branch: DataFrame, sink: SinkSpec, mode: str) -> None:
 
     The Iceberg deployment shape for ``output { iceberg { table => … } }``:
     first batch creates the table partitioned by ``bucket`` (with the
-    Iceberg provider that's a hidden-partitioned v2 table); re-runs of
-    the same batch in overwrite mode land as dynamic partition
-    overwrite (``overwritePartitions`` ≙ Iceberg's replace-partitions
-    commit — the same idempotent-resume contract the path sinks get
-    from ``partitionOverwriteMode=dynamic``); append mode accumulates
-    micro-batches. Catalog-agnostic: exercised in-sandbox against the
-    built-in session catalog (tests/test_sources.py::test_catalog_table_sink_overwrite_and_append).
+    Iceberg provider that's a hidden-partitioned v2 table) and with the
+    table option ``partitionOverwriteMode=dynamic``; re-runs of the same
+    batch in overwrite mode land as dynamic partition overwrite
+    (``overwritePartitions`` ≙ Iceberg's replace-partitions commit — the
+    same idempotent-resume contract the path sinks get from their
+    per-write option); append mode accumulates micro-batches.
+    Catalog-agnostic: exercised in-sandbox against the built-in session
+    catalog (tests/test_sources.py::test_catalog_table_sink_overwrite_and_append).
     """
     from pyspark.errors import AnalysisException
 
     spark = branch.sparkSession
     if not spark.catalog.tableExists(sink.table):
-        creator = branch.writeTo(sink.table).using(sink.fmt)
+        creator = (branch.writeTo(sink.table).using(sink.fmt)
+                   .option(_OVERWRITE_MODE_KEY, "dynamic"))
         if "bucket" in branch.columns:
             creator = creator.partitionedBy(F.col("bucket"))
         creator.create()
@@ -204,11 +206,32 @@ def _write_catalog_table(branch: DataFrame, sink: SinkSpec, mode: str) -> None:
         # The built-in session catalog exposes parquet tables as v1,
         # which rejects DataFrameWriterV2 writes — fall back to the v1
         # writer. insertInto is position-based, so align to the table's
-        # column order first; `partitionOverwriteMode=dynamic`
-        # (session.py) gives overwrite the same replace-partitions
-        # semantics the V2 path has.
+        # column order first. It ignores writer options: its overwrite
+        # is bucket-scoped only through the table's storage property,
+        # else the session conf — without either it would wipe every
+        # other bucket, so refuse it.
+        if mode == "overwrite" and "bucket" in branch.columns:
+            _require_dynamic_overwrite(spark, sink.table)
         aligned = branch.select(*spark.table(sink.table).columns)
         aligned.write.insertInto(sink.table, overwrite=(mode == "overwrite"))
+
+
+def _require_dynamic_overwrite(spark, table: str) -> None:
+    import json
+
+    desc = json.loads(
+        spark.sql(f"DESCRIBE TABLE EXTENDED {table} AS JSON").first()[0])
+    props = {k.lower(): v for k, v in
+             (desc.get("storage_properties") or {}).items()}
+    effective = props.get(_OVERWRITE_MODE_KEY.lower()) or spark.conf.get(
+        "spark.sql.sources.partitionOverwriteMode")
+    if effective.lower() != "dynamic":
+        raise ValueError(
+            f"overwrite into {table} would replace the whole table, not "
+            "the batch's buckets: neither its storage properties nor the "
+            "session set partitionOverwriteMode to dynamic. Run: "
+            f"ALTER TABLE {table} SET SERDEPROPERTIES "
+            f"('{_OVERWRITE_MODE_KEY}'='dynamic')")
 
 
 def _rubydebug_render(row) -> str:
@@ -230,19 +253,15 @@ def _rubydebug_render(row) -> str:
     return "{\n" + ",\n".join(lines) + "\n}"
 
 
-_DEBUG_STDOUT_LOCK = None
+# the sink fan-out runs concurrently; two debug sinks interleaving
+# mid-event would garble the exact bring-up output these codecs exist
+# for (review finding) — serialize stdout across them
+_DEBUG_STDOUT_LOCK = threading.Lock()
 
 
 def _write_debug_stdout(branch: DataFrame, fmt: str) -> int:
     import sys
-    import threading
 
-    # the sink fan-out runs concurrently; two debug sinks interleaving
-    # mid-event would garble the exact bring-up output these codecs
-    # exist for (review finding) — serialize stdout across them
-    global _DEBUG_STDOUT_LOCK
-    if _DEBUG_STDOUT_LOCK is None:
-        _DEBUG_STDOUT_LOCK = threading.Lock()
     if fmt == "dots":
         n = branch.count()
         with _DEBUG_STDOUT_LOCK:
@@ -320,20 +339,19 @@ class Router:
 
         The at-least-once resume guarantee must not depend on who built
         the SparkSession: ``mode("overwrite").partitionBy("bucket")`` is
-        only bucket-scoped when ``spark.sql.sources.partitionOverwriteMode``
-        is ``dynamic`` — under the Spark default (STATIC) it truncates the
-        whole sink root, so every micro-batch would erase its predecessors
-        and resume would silently keep only the last batch. The conf is a
-        runtime-settable SQL conf; pin it here for the duration of the
-        fan-out and restore the caller's value after (reference parity:
+        only bucket-scoped under dynamic partition overwrite — under the
+        Spark default (STATIC) it truncates the whole sink root, so every
+        micro-batch would erase its predecessors and resume would
+        silently keep only the last batch. Path sinks therefore carry
+        ``partitionOverwriteMode=dynamic`` as a per-write option, and
+        catalog tables as a table option (``_write_catalog_table``);
+        the session conf is left alone (reference parity:
         ackedqueue/Queue.java ack semantics — a replayed batch must land
         idempotently regardless of process-level configuration).
         """
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import Observation
-
-        OVERWRITE_MODE_CONF = "spark.sql.sources.partitionOverwriteMode"
 
         def write_one(sink: SinkSpec) -> tuple[str, int]:
             branch = self.branch(df, sink)
@@ -348,8 +366,11 @@ class Router:
                 # role they play in the reference).
                 return sink.name, _write_debug_stdout(branch, sink.fmt)
             # per-sink count rides the write job via observe() — no second
-            # pass, no extra job (Logstash's per-output events counter)
-            obs = Observation(f"sink_{sink.name}")
+            # pass, no extra job (Logstash's per-output events counter).
+            # Unnamed: a named one left pending by a write that failed
+            # before running would swallow a retry's metric on the same
+            # frame, and the retry's get would block forever
+            obs = Observation()
             branch = branch.observe(obs, F.count(F.lit(1)).alias("n"))
             if sink.table:
                 if truncate_tables and df.sparkSession.catalog.tableExists(
@@ -381,7 +402,8 @@ class Router:
                     raise
             else:
                 path = f"{run_dir}/{sink.name}"
-                writer = branch.write.format(sink.fmt).mode(mode)
+                writer = (branch.write.format(sink.fmt).mode(mode)
+                          .option(_OVERWRITE_MODE_KEY, "dynamic"))
                 if "bucket" in branch.columns:
                     writer = writer.partitionBy("bucket")
                 writer.save(path)
@@ -392,31 +414,5 @@ class Router:
         # the reference writes outputs from the same worker pass,
         # DatasetCompiler#outputDataset). Serializing them would leave
         # the cluster idle between job tails.
-        # Depth-counted pin: two concurrent write_batch calls share one
-        # session conf, so a plain save/restore races — the first
-        # finisher would flip the mode back to STATIC while the other
-        # is mid-write, resurrecting the whole-sink-root truncation this
-        # pin exists to prevent. The prior value is captured by the
-        # OUTERMOST writer and restored only when the last one leaves.
-        spark = df.sparkSession
-        key = id(spark)
-        with _MODE_PIN_LOCK:
-            depth, prior_mode = _MODE_PIN.get(
-                key, (0, spark.conf.get(OVERWRITE_MODE_CONF, None))
-            )
-            _MODE_PIN[key] = (depth + 1, prior_mode)
-            spark.conf.set(OVERWRITE_MODE_CONF, "dynamic")
-        try:
-            with ThreadPoolExecutor(max_workers=max(1, len(self.sinks))) as pool:
-                return dict(pool.map(write_one, self.sinks))
-        finally:
-            with _MODE_PIN_LOCK:
-                depth, prior_mode = _MODE_PIN[key]
-                if depth == 1:
-                    del _MODE_PIN[key]
-                    if prior_mode is None:
-                        spark.conf.unset(OVERWRITE_MODE_CONF)
-                    else:
-                        spark.conf.set(OVERWRITE_MODE_CONF, prior_mode)
-                else:
-                    _MODE_PIN[key] = (depth - 1, prior_mode)
+        with ThreadPoolExecutor(max_workers=max(1, len(self.sinks))) as pool:
+            return dict(pool.map(write_one, self.sinks))

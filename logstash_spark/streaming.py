@@ -1,5 +1,7 @@
-"""Structured-Streaming execution mode: the same compiled pipeline DAG
-run per micro-batch via ``foreachBatch``.
+"""Structured-Streaming execution mode: ``foreachBatch`` runs
+``Pipeline.execute_batch`` — the same per-batch body as batch mode
+(compile, bucket shuffle + persist, failure census, sink fan-out) —
+per micro-batch, in append mode.
 
 Reference counterparts:
 * Logstash IS a streaming engine (input threads → queue → workers,
@@ -24,13 +26,12 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from .pipeline import BUCKET_COL, Pipeline, _failure_census
+# _failure_census stays importable here: perfbench/traced.py wraps it by name
+from .pipeline import Pipeline, _failure_census, _with_bucket  # noqa: F401
 
 
 def stream_from_directory(
@@ -61,47 +62,12 @@ def run_streaming(
     """
     os.makedirs(run_dir, exist_ok=True)
     metrics_path = f"{run_dir}/metrics_stream.jsonl"
-    stage_tags = pipe._stage_failure_tags()
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        t0 = time.monotonic()
-        bucketed = batch_df.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_on)), F.lit(n_buckets))
-        )
-        # events.in must be the PRE-compile ingress count (batch-mode
-        # parity / node-stats semantics): a drop/split filter changes
-        # the post-compile count, which is events.filtered
-        obs = Observation(f"sin_{batch_id}")
-        bucketed = bucketed.observe(obs, F.count(F.lit(1)).alias("events_in"))
-        routed = (
-            pipe.compile(bucketed)
-            .repartition(n_buckets, F.col(BUCKET_COL))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            total, failures = _failure_census(routed, stage_tags)
-            in_count = int(obs.get["events_in"])
-            sink_counts = pipe.router.write_batch(
-                routed, run_dir, mode="append"
-            )
-        finally:
-            routed.unpersist()
-            pipe.release_branch_caches()
-        rec = {
-            "batch_id": batch_id,
-            "events": {
-                "in": in_count,
-                "filtered": total,
-                "out": sum(sink_counts.values()),
-                "duration_in_millis": int((time.monotonic() - t0) * 1000),
-            },
-            "sinks": sink_counts,
-            "failures": failures,
-        }
+        rec = pipe.execute_batch(_with_bucket(batch_df, bucket_on, n_buckets),
+                                 run_dir, n_buckets, mode="append")
         with open(metrics_path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+            f.write(json.dumps({"batch_id": batch_id, **rec}) + "\n")
 
     writer = (
         stream.writeStream.foreachBatch(handle_batch)

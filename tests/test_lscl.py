@@ -12,7 +12,9 @@ import json
 import subprocess
 import sys
 
-from logstash_spark.lscl import to_pipeline_spec
+import pytest
+
+from logstash_spark.lscl import LsclError, to_pipeline_spec
 
 CONF = r"""
 # apache-style pipeline
@@ -75,6 +77,17 @@ def test_nested_if_conjunction():
         "filter { if [a] > 1 { if [b] > 2 { mutate { add_tag => [\"x\"] } } } }"
     )
     assert spec["filters"][0]["when"] == "([a] > 1) and ([b] > 2)"
+
+
+def test_condition_errors_report_offset():
+    """`if` / `else if` are reserved words: a bare `if {` has no
+    condition, and the error says where."""
+    with pytest.raises(LsclError, match="empty condition at offset 12"):
+        to_pipeline_spec("filter { if { } }")
+    with pytest.raises(LsclError, match="unterminated condition at offset 12"):
+        to_pipeline_spec("filter { if [a] > 1")
+    with pytest.raises(LsclError, match="unterminated condition at offset 11"):
+        to_pipeline_spec("filter { if")
 
 
 def test_cli_end_to_end(tmp_path):

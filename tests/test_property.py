@@ -19,7 +19,9 @@ from logstash_spark.lscl import to_pipeline_spec
 
 # ---------------------------------------------------------------- lscl
 
-_ident = st.text(alphabet=string.ascii_lowercase + "_", min_size=1, max_size=8)
+# `if` / `else` open branches, not plugins (test_lscl covers the rejection)
+_ident = st.text(alphabet=string.ascii_lowercase + "_", min_size=1,
+                 max_size=8).filter(lambda s: s not in ("if", "else"))
 _safe_str = st.text(
     alphabet=string.ascii_letters + string.digits + " _-./:%{}",
     max_size=20,

@@ -144,6 +144,80 @@ def test_catalog_table_sink_overwrite_and_append(spark):
         spark.sql("DROP TABLE IF EXISTS ls_sink_out")
 
 
+_OVERWRITE_CONF = "spark.sql.sources.partitionOverwriteMode"
+
+
+def test_catalog_table_sink_static_session(spark, monkeypatch):
+    """Under a STATIC session an engine-created catalog table still
+    overwrites bucket by bucket: the create carries
+    partitionOverwriteMode=dynamic as a table option, so a re-run keeps
+    the other buckets' rows, and the session conf is never written."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from logstash_spark.router import Router, SinkSpec
+
+    prior = spark.conf.get(_OVERWRITE_CONF)
+    spark.conf.set(_OVERWRITE_CONF, "STATIC")
+    spark.sql("DROP TABLE IF EXISTS ls_sink_static")
+
+    def refuse(self, *args):
+        raise AssertionError(f"session conf written: {args}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    monkeypatch.setattr(RuntimeConfig, "unset", refuse)
+    schema = "url string, bucket int"
+    router = Router([SinkSpec(name="out", table="ls_sink_static")])
+    try:
+        router.write_batch(
+            spark.createDataFrame([("u1", 0), ("u2", 0), ("u3", 1)], schema),
+            run_dir="/tmp/unused", mode="overwrite")
+        # re-run of bucket 1 only: bucket 0 must survive
+        router.write_batch(spark.createDataFrame([("u4", 1)], schema),
+                           run_dir="/tmp/unused", mode="overwrite")
+        rows = sorted(tuple(r) for r in spark.table("ls_sink_static").collect())
+        assert rows == [("u1", 0), ("u2", 0), ("u4", 1)]
+        assert spark.conf.get(_OVERWRITE_CONF) == "STATIC"
+    finally:
+        monkeypatch.undo()
+        spark.sql("DROP TABLE IF EXISTS ls_sink_static")
+        spark.conf.set(_OVERWRITE_CONF, prior)
+
+
+def test_catalog_table_overwrite_refused_without_dynamic_option(spark):
+    """A pre-existing v1 table created without the dynamic option, under
+    a STATIC session: insertInto(overwrite) would wipe every bucket, so
+    the sink refuses and names the fix; after the fix the overwrite is
+    bucket-scoped."""
+    from pyspark.sql import functions as F
+
+    from logstash_spark.router import Router, SinkSpec
+
+    prior = spark.conf.get(_OVERWRITE_CONF)
+    spark.conf.set(_OVERWRITE_CONF, "STATIC")
+    spark.sql("DROP TABLE IF EXISTS ls_sink_plain")
+    schema = "url string, bucket int"
+    spark.createDataFrame([("u1", 0), ("u2", 0), ("u3", 1)], schema) \
+        .writeTo("ls_sink_plain").using("parquet") \
+        .partitionedBy(F.col("bucket")).create()
+    router = Router([SinkSpec(name="out", table="ls_sink_plain")])
+    rerun = spark.createDataFrame([("u4", 1)], schema)
+    try:
+        with pytest.raises(
+                ValueError,
+                match=r"ALTER TABLE ls_sink_plain SET SERDEPROPERTIES "
+                      r"\('partitionOverwriteMode'='dynamic'\)"):
+            router.write_batch(rerun, run_dir="/tmp/unused", mode="overwrite")
+        assert spark.table("ls_sink_plain").count() == 3  # nothing written
+        spark.sql("ALTER TABLE ls_sink_plain SET SERDEPROPERTIES "
+                  "('partitionOverwriteMode'='dynamic')")
+        router.write_batch(rerun, run_dir="/tmp/unused", mode="overwrite")
+        rows = sorted(tuple(r) for r in spark.table("ls_sink_plain").collect())
+        assert rows == [("u1", 0), ("u2", 0), ("u4", 1)]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ls_sink_plain")
+        spark.conf.set(_OVERWRITE_CONF, prior)
+
+
 def test_kafka_input_option_contract(spark):
     """Contract tests for the kafka input lowering (no broker or
     spark-sql-kafka jar in the sandbox — the option map IS the testable

@@ -77,30 +77,81 @@ def test_streaming_foreachbatch_e2e(spark, tmp_path):
 def test_streaming_events_in_is_pre_filter_ingress(spark, tmp_path):
     """Batch-mode parity for node-stats counters: events.in is the
     PRE-compile ingress count; a drop filter must lower events.filtered
-    (post-compile) but never events.in."""
+    (post-compile) but never events.in. Batch and streaming run the same
+    per-batch body, so over the same input the stream records sum to the
+    batch run's manifest entry."""
     src_dir = str(tmp_path / "src_drop")
     n = 200
     spark.range(n).select(
         F.concat(F.lit("https://d"), F.col("id").cast("string")).alias("url"),
         F.when(F.pmod("id", F.lit(4)) == 0, "keep").otherwise("drop")
         .alias("verdict"),
-    ).coalesce(1).write.parquet(src_dir)
+    ).repartition(3).write.parquet(src_dir)
 
-    pipe = Pipeline({
+    spec = {
         "id": "drop_stream",
-        "filters": [{"drop": {"when": "[verdict] == 'drop'"}}],
-        "outputs": [{"name": "kept"}],
-    })
+        "filters": [
+            {"drop": {"when": "[verdict] == 'drop'"}},
+            # ids ending in 0 match; the rest carry _grokparsefailure
+            {"grok": {"match": {"url": "https://d%{INT:n}0$"}}},
+        ],
+        "outputs": [{"name": "kept"},
+                    {"name": "dead_letter", "dlq": True}],
+    }
     run_dir = str(tmp_path / "run_drop")
     stream = stream_from_directory(
-        spark, src_dir, "url string, verdict string")
-    run_streaming(pipe, stream, run_dir, bucket_on="url", n_buckets=4,
-                  timeout_sec=300)
+        spark, src_dir, "url string, verdict string", max_files_per_trigger=1)
+    run_streaming(Pipeline(spec), stream, run_dir, bucket_on="url",
+                  n_buckets=4, timeout_sec=300)
     with open(f"{run_dir}/metrics_stream.jsonl") as f:
         recs = [json.loads(line) for line in f]
+    assert len(recs) == 3
     assert sum(r["events"]["in"] for r in recs) == n
     assert sum(r["events"]["filtered"] for r in recs) == n // 4
     assert sum(r["sinks"]["kept"] for r in recs) == n // 4
+
+    batch_dir = str(tmp_path / "batch_drop")
+    Pipeline(spec).run(spark.read.parquet(src_dir), batch_dir,
+                       bucket_on="url", n_buckets=4)
+    entry = json.loads(
+        (tmp_path / "batch_drop" / "_checkpoints" / "batch-00000.json")
+        .read_text())
+
+    def summed(key):
+        out = {}
+        for r in recs:
+            for k, v in r[key].items():
+                if k != "duration_in_millis":
+                    out[k] = out.get(k, 0) + v
+        return out
+
+    batch_events = dict(entry["events"])
+    del batch_events["duration_in_millis"]
+    assert summed("events") == batch_events
+    assert summed("sinks") == entry["sinks"]
+    assert summed("failures") == entry["failures"]
+    # 50 kept ids (multiples of 4); 9 match (20, 40, …, 180; `d0` has no
+    # digit before the 0), so 41 grok failures land in the DLQ
+    assert entry["failures"] == {"grok": 41}
+    assert entry["sinks"] == {"kept": 50, "dead_letter": 41}
+
+
+def test_streaming_bucket_removal_is_refused(spark, tmp_path):
+    """A filter that removes the internal bucket column fails a stream
+    with the same ValueError as a batch run, not a raw analysis error
+    from the repartition or the sink write."""
+    src_dir = str(tmp_path / "src_nobucket")
+    spark.createDataFrame([("https://a",), ("https://b",)], "url string") \
+        .coalesce(1).write.parquet(src_dir)
+    pipe = Pipeline({
+        "id": "nobucket",
+        "filters": [{"mutate": {"remove_field": ["bucket"]}}],
+        "outputs": [{"name": "out"}],
+    })
+    stream = stream_from_directory(spark, src_dir, "url string")
+    with pytest.raises(Exception, match="removed the internal 'bucket' column"):
+        run_streaming(pipe, stream, str(tmp_path / "run_nobucket"),
+                      n_buckets=4, timeout_sec=300)
 
 
 def test_streaming_resume_checkpoint(spark, tmp_path):
