@@ -217,10 +217,6 @@ def gen_domain_dict(spark: SparkSession, n: int = N_DOMAINS) -> DataFrame:
     return spark.createDataFrame(rows, "key string, category string, trust double")
 
 
-def gen_tld_suffixes(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in TLDS], "suffix string")
-
-
 def gen_access_logs(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Apache combined-format lines + ~3% malformed rows (grok corpus)."""
     if partitions is None:

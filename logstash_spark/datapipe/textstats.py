@@ -9,8 +9,13 @@ logic is trivially SQL-expressible for the DuckDB oracle.
 * quality score: length / punctuation ratio / stopword ratio /
   mean word length — a FineWeb-style composite in [0, 1].
 * token counting: whitespace tokens + a BPE-ish regex token count.
-* fingerprinting: polynomial rolling hash over tokens (crc32 per token,
-  31-multiplier accumulate — wraps in int64).
+* fingerprinting: polynomial rolling hash over tokens (md5-prefix hash
+  per token, 31-multiplier accumulate mod 2^31).
+
+Language-ID, quality and token counts come from one fold per row
+(``text_quality_stats``); the suite's ``textstats_quality`` query
+checks every value against a DuckDB SQL oracle that computes each
+signal separately.
 """
 
 from __future__ import annotations
@@ -37,69 +42,14 @@ def words(col: Column) -> Column:
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
-def whitespace_token_count(col: Column) -> Column:
-    return F.when(F.length(F.trim(col)) == 0, F.lit(0)).otherwise(F.size(words(col)))
-
-
 def bpe_ish_token_count(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(BPE_ISH_REGEX), F.lit(0)))
-
-
-def lang_hit_count(col: Column, lang: str) -> Column:
-    markers = LANG_MARKERS[lang]
-    return F.size(F.filter(words(col), lambda w: w.isin(*markers)))
-
-
-def detect_language(col: Column, min_hits: int = 1) -> Column:
-    """argmax over marker-hit counts; ties broken by fixed lang order;
-    below min_hits → 'und'."""
-    counts = {lang: lang_hit_count(col, lang) for lang in LANG_MARKERS}
-    best = None
-    for lang, cnt in counts.items():
-        if best is None:
-            best = F.when(cnt >= min_hits, F.lit(lang)).otherwise(F.lit("und"))
-            best_cnt = cnt
-        else:
-            cond = (cnt >= min_hits) & (cnt > best_cnt)
-            best = F.when(cond, F.lit(lang)).otherwise(best)
-            best_cnt = F.greatest(best_cnt, cnt)
-    return best
 
 
 def punct_ratio(col: Column) -> Column:
     n = F.length(col)
     punct = F.length(F.regexp_replace(col, r"[^.,;:!?'\"()\[\]{}-]", ""))
     return F.when(n > 0, punct / n).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column) -> Column:
-    ws = words(col)
-    n = F.size(ws)
-    hits = F.size(F.filter(ws, lambda w: w.isin(*EN_STOPWORDS)))
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def mean_word_len(col: Column) -> Column:
-    ws = words(col)
-    return F.when(
-        F.size(ws) > 0,
-        F.aggregate(ws, F.lit(0.0), lambda acc, w: acc + F.length(w)) / F.size(ws),
-    ).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite in [0,1]: length band + sane mean word length + low
-    punctuation + nonzero stopword presence. Deterministic, heuristic,
-    SQL-expressible — the point is plumbing, not linguistics."""
-    n_tok = whitespace_token_count(col)
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 100000), F.lit(0.4)).otherwise(
-        F.when(n_tok > 0, F.lit(0.1)).otherwise(F.lit(0.0))
-    )
-    mwl = mean_word_len(col)
-    mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(0.3)).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(col) <= 0.2, F.lit(0.2)).otherwise(F.lit(0.0))
-    stop_ok = F.when(stopword_ratio(col) > 0.0, F.lit(0.1)).otherwise(F.lit(0.0))
-    return F.round(len_ok + mwl_ok + punct_ok + stop_ok, 2)
 
 
 # Modulus for the rolling-hash accumulator. Bounding acc < 2^31 keeps
@@ -138,7 +88,7 @@ def _stats_vector(col: Column) -> Column:
     [n_tokens, total_word_len, c_en, c_de, c_fr, c_es, c_it,
     en_stop_hits] as an aggregate with an array accumulator.
 
-    The per-column functions above each re-split the text — and with
+    One function per signal would each re-split the text — and with
     N of them in one projection the split/lower/trim chain runs N
     times per row, because higher-order functions are interpreted
     (CodegenFallback: no whole-stage-codegen subexpression
@@ -169,9 +119,10 @@ def text_quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     traversal per row: the stats vector is materialized through an
     explode(array(...)) barrier — a Generate node, which projection
     collapse cannot cross, so the fold runs once even though four
-    output columns consume it. Values are identical to the per-column
-    functions (integer sums are exact in either domain; divisions are
-    the same IEEE ops), so the DuckDB oracle is unchanged."""
+    output columns consume it. The suite's ``textstats_quality`` query
+    checks every value against a DuckDB oracle that computes each
+    signal separately (integer sums are exact in either engine;
+    divisions are the same IEEE ops)."""
     from .dedup import _spread
 
     c = F.col(text_col)

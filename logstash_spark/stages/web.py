@@ -11,9 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-import os
-
-from ..extract import extract_text_column
+from ..extract import extract_text_udf
 from ..fieldref import field_col
 from .base import Stage, register
 
@@ -26,23 +24,12 @@ class ExtractTextStage(Stage):
     huge ``html`` binary column, so the pipeline should project ``html``
     away immediately after (SURVEY §4: keep html-touching UDFs early &
     select-pruned so the binary never reaches a shuffle).
-    conf: source (default html), target (default text), drop_source,
-    mode (python|auto|native — default python; env LS_SPARK_EXTRACT_MODE
-    overrides for A/B benchmarking).
+    conf: source (default html), target (default text), drop_source.
 
-    Round-5 finding (measure, don't guess): we built the JVM-native
-    Catalyst lowering the round-4 verdict asked for
-    (extract.extract_text_column mode=auto/native, byte-differential
-    gated, guard-routed oracle fallback) and MEASURED it slower than
-    the Arrow path — 2.6 MB/s/core vs 20.1 MB/s/core for the
-    CPython-regex oracle through Spark local[1], 32.2 MB/s/core raw
-    (BASELINE.md round-5 extractor study). Java
-    regex pays a UTF8String→UTF-16 conversion per regexp_replace pass
-    plus slower alternation scanning; CPython's sre + C-level
-    str.translate/split win. The default therefore stays on the
-    vectorized Arrow oracle path; auto/native remain available and
-    byte-identity-tested (tests/test_extract_native.py) for engines/
-    clusters where Python workers are the scarce resource.
+    The Arrow pandas_udf over the CPython oracle is the only path,
+    because a Catalyst ``regexp_replace`` lowering of the same semantics
+    measured about 7× slower even on 4 cores (6.9 s vs 1.0 s for 36 MB
+    of html, BASELINE.md round-5 extractor study).
     """
 
     def _targets(self, df: DataFrame) -> list[str] | None:
@@ -53,10 +40,7 @@ class ExtractTextStage(Stage):
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column]:
         source = self.conf.get("source", "html")
         target = self.conf.get("target", "text")
-        mode = os.environ.get(
-            "LS_SPARK_EXTRACT_MODE", self.conf.get("mode", "python")
-        )
-        df = df.withColumn(target, extract_text_column(field_col(source), mode=mode))
+        df = df.withColumn(target, extract_text_udf()(field_col(source)))
         if self.conf.get("drop_source", False):
             df = df.drop(source)
         return df, F.col(target).isNotNull()
@@ -64,7 +48,7 @@ class ExtractTextStage(Stage):
 
 @register("parse_url")
 class ParseUrlStage(Stage):
-    """url → domain/path(+query) via native ``F.try_parse_url`` (JVM-side).
+    """url → domain/path (without query) via native ``F.try_parse_url`` (JVM-side).
 
     conf: source (default url). Adds ``domain`` and ``path`` columns.
     try_ variant: a malformed url yields nulls (→ failure routing),
