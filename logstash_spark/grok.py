@@ -882,7 +882,6 @@ def compile_grok(
     return CompiledGrok(regex=compiled, fields=fields)
 
 
-_PD_CAST = {"int": "Int64", "float": "Float64", "string": "object"}
 _SPARK_TYPE = {"int": "long", "float": "double", "string": "string"}
 
 

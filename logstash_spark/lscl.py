@@ -242,12 +242,6 @@ class _Parser:
 
 # ---------------------------------------------------------------- lowering
 
-# LSCL plugin arg → stage conf renames where the reference's option name
-# differs from the stage conf key.
-_FILTER_ARG_RENAMES = {
-    "kv": {"target": "target"},
-}
-
 def _pathsafe(name: str) -> str:
     """Sink names are single path segments under run_dir (Router
     validates); flatten user-supplied paths/indices the same way for

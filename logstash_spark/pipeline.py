@@ -106,23 +106,6 @@ class Pipeline:
             cached.unpersist()
         self._branch_caches = []
 
-    # ---- failure-tag census (per-stage metrics) ----------------------------
-    def _stage_failure_tags(self) -> dict[str, list[str]]:
-        out = {}
-        defaults = {
-            "grok": ["_grokparsefailure"],
-            "dissect": ["_dissectfailure"],
-            "json": ["_jsonparsefailure"],
-            "csv": ["_csvparsefailure"],
-            "date": ["_dateparsefailure"],
-            "geoip": ["_geoip_lookup_failure"],
-        }
-        for _, stage in self.stages:
-            tags = stage.conf.get("tag_on_failure") or defaults.get(stage.plugin_name, [])
-            if tags:
-                out[stage.id] = tags
-        return out
-
     # ---- execution ----------------------------------------------------------
     def run(
         self,
@@ -268,7 +251,7 @@ class Pipeline:
             # ONE materializing agg: total row count + per-stage failure
             # counts (fills the cache; separate count() jobs removed)
             filtered, failures = _failure_census(
-                routed, self._stage_failure_tags())
+                routed, {s.id: s.failure_tags for _, s in self.stages if s.failure_tags})
             sinks = self.router.write_batch(
                 routed, run_dir, mode=mode, truncate_tables=truncate_tables)
         finally:

@@ -37,12 +37,14 @@ from .fieldref import METADATA_FIELD, TAGS_FIELD
 
 # default DLQ predicate: any parse/enrich failure tag present
 DLQ_DEFAULT_CONDITION = "failure_tags_present"
+# the failure-tag rule: a parse/lookup failure or an enrich miss
+_is_failure_tag = lambda t: t.endswith("failure") | t.endswith("_miss")  # noqa: E731
 
 
 def failure_tag_predicate(df: DataFrame) -> Column:
     if TAGS_FIELD not in df.columns:
         return F.lit(False)
-    return F.exists(F.col(TAGS_FIELD), lambda t: t.endswith("failure") | t.endswith("_miss"))
+    return F.exists(F.col(TAGS_FIELD), _is_failure_tag)
 
 # the per-write/table option that makes an overwrite bucket-scoped
 _OVERWRITE_MODE_KEY = "partitionOverwriteMode"
@@ -92,7 +94,7 @@ def dlq_projection(df: DataFrame) -> DataFrame:
     cols = df.columns
     url = F.col("url") if "url" in cols else F.lit(None).cast("string")
     tags = F.col(TAGS_FIELD) if TAGS_FIELD in cols else F.array().cast("array<string>")
-    fail_tags = F.filter(tags, lambda t: t.endswith("failure") | t.endswith("_miss"))
+    fail_tags = F.filter(tags, _is_failure_tag)
     ts = (
         F.col("event_ts")
         if "event_ts" in cols

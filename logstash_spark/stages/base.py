@@ -16,8 +16,6 @@ reads like a logstash.conf: ``{"grok": {...}}``, ``{"mutate": {...}}``.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
@@ -277,6 +275,15 @@ def ensure_tags(df: DataFrame) -> DataFrame:
     return df.withColumn(TAGS_FIELD, F.array().cast("array<string>"))
 
 
+def _as_list(v) -> list:
+    """A list-valued option as a list: LSCL hands a one-element list
+    over as a bare string (``add_tag => "seen"``), and ``list()`` of a
+    string would split it into characters."""
+    if not v:
+        return []
+    return [v] if isinstance(v, str) else list(v)
+
+
 def _tag_col(t: str) -> Column:
     """filters/base.rb sprintf-interpolates tag values before tagging
     (``event.tag(event.sprintf(tag))``) — ``add_tag => ["%{type}_ok"]``
@@ -301,17 +308,29 @@ def add_tags(df: DataFrame, tags: list[str], cond: Column | None = None) -> Data
 
 
 class Stage:
-    """Base class. Subclasses implement ``transform``."""
+    """Base class. Subclasses implement ``transform``.
+
+    A stage whose reference plugin tags failed events declares that
+    default tag as ``FAILURE_TAG``; ``failure_tags`` is the tag list in
+    effect (the ``FAILURE_OPTION`` conf override, else the default). The
+    stage tags its failures with it and the pipeline's failure census
+    counts it.
+    """
 
     plugin_name = "stage"
+    FAILURE_TAG: str | None = None
+    FAILURE_OPTION = "tag_on_failure"
 
     def __init__(self, conf: dict):
         self.conf = dict(conf)
         self.id = self.conf.pop("id", None) or self.plugin_name
         self.add_field: dict[str, str] = self.conf.pop("add_field", {}) or {}
-        self.add_tag: list[str] = self.conf.pop("add_tag", []) or []
-        self.remove_field: list[str] = self.conf.pop("remove_field", []) or []
-        self.remove_tag: list[str] = self.conf.pop("remove_tag", []) or []
+        self.add_tag = _as_list(self.conf.pop("add_tag", None))
+        self.remove_field = _as_list(self.conf.pop("remove_field", None))
+        self.remove_tag = _as_list(self.conf.pop("remove_tag", None))
+        self.failure_tags = _as_list(
+            self.conf.get(self.FAILURE_OPTION, self.FAILURE_TAG)
+        ) if self.FAILURE_TAG else []
 
     # ---- subclass contract -------------------------------------------------
     def transform(self, df: DataFrame) -> tuple[DataFrame, Column | None]:
@@ -525,8 +544,6 @@ def build_stage(spec: dict | tuple[str, dict]) -> Stage:
 def apply_stage(df: DataFrame, spec: dict) -> DataFrame:
     return build_stage(spec).apply(df)
 
-
-StageFn = Callable[[DataFrame], DataFrame]
 
 __all__ = [
     "Stage",

@@ -1,11 +1,15 @@
-"""Enrich-family stages: lookup joins against broadcast dimension tables.
+"""Enrich-family stages: lookups against broadcast dimension snapshots.
 
 The reference does every enrichment as a per-event hash/tree lookup
-with an in-process cache (translate/geoip/useragent/cidr). The Spark
-re-expression is uniformly a **broadcast join** — the dimension ships
-once per executor, the probe stays in whole-stage codegen, and no
-shuffle touches the (huge) fact side. SURVEY §2.6 notes geoip is the
-one *range* join in the reference's surface.
+with an in-process cache (translate/geoip/useragent/cidr/dns/
+memcached). Here the dimension ships once per executor, the probe
+stays in whole-stage codegen, and no shuffle touches the (huge) fact
+side. The exact-key lookups — translate, dns and memcached — share one
+path, ``snapshot_lookup``: a dict of at most ``MAP_LITERAL_MAX``
+entries becomes a plan-time ``create_map`` literal, a larger dict or a
+DataFrame becomes a broadcast hash join, and duplicate DataFrame keys
+resolve to the smallest value. SURVEY §2.6 notes geoip is the one
+*range* join in the reference's surface.
 """
 
 from __future__ import annotations
@@ -15,9 +19,51 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..fieldref import field_col, field_name
-from .base import Stage, add_tags, register
+from .base import Stage, _as_list, add_tags, register
+
+# A create_map literal embeds the whole snapshot in the plan: right for
+# small dims, but it bloats analysis at tens of thousands of entries.
+MAP_LITERAL_MAX = 10_000
+
+
+def _orderable(dt) -> bool:
+    """Spark's ORDER BY rule: a map is never orderable; an array or a
+    struct is orderable iff its element/field types are."""
+    if isinstance(dt, T.MapType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
+def snapshot_lookup(df: DataFrame, key: Column, snapshot: dict | DataFrame,
+                    out: str) -> DataFrame:
+    """Add column ``out``: the value ``key`` maps to in ``snapshot``, null
+    on a miss (or a null key).
+
+    A dict of at most ``MAP_LITERAL_MAX`` entries becomes a plan-time
+    ``create_map`` literal (no join). A larger dict, or a two-column
+    (key, value) DataFrame, becomes a broadcast left join. Duplicate
+    DataFrame keys resolve to the smallest value (ordered by ``to_json``
+    for types Spark cannot order), so the pick is the same on every run
+    and retry and no event is multiplied."""
+    if isinstance(snapshot, dict):
+        if not snapshot:
+            return df.withColumn(out, F.lit(None).cast("string"))
+        if len(snapshot) <= MAP_LITERAL_MAX:
+            m = F.create_map(*[F.lit(x) for kv in snapshot.items() for x in kv])
+            return df.withColumn(out, m[key])
+        snapshot = df.sparkSession.createDataFrame(list(snapshot.items()))
+    dim = snapshot.toDF(f"{out}_k", out)
+    val = F.col(out)
+    order = val if _orderable(dim.schema[out].dataType) else F.to_json(val)
+    dim = dim.groupBy(f"{out}_k").agg(F.min_by(val, order).alias(out))
+    return df.join(F.broadcast(dim), key == F.col(f"{out}_k"), "left").drop(f"{out}_k")
 
 
 def ip_to_long(col: Column) -> Column:
@@ -80,14 +126,18 @@ def load_dictionary_file(path: str) -> dict:
 class TranslateStage(Stage):
     """logstash-filter-translate:lib/logstash/filters/translate.rb.
 
-    conf: source, target, dictionary (inline dict → literal create_map,
-    no join at all) OR dictionary_path (YAML/CSV/JSON file loaded at
-    plan time, ≙ translate.rb's file dictionaries) OR dictionary_df
-    (2+ column DataFrame, first column is the key → broadcast hash
-    join), fallback (F.coalesce), exact (False → keys are regexes,
-    first match wins — a plan-time when-chain of rlike tests).
-    Lookup-miss with no fallback leaves target null (reference leaves
-    the field unset) and optionally tags ``tag_on_miss``.
+    conf: source, target, dictionary (inline dict) OR dictionary_path
+    (YAML/CSV/JSON file loaded at plan time, ≙ translate.rb's file
+    dictionaries) OR dictionary_df (DataFrame whose first column is the
+    key; the other column is the value, several pack into one struct),
+    fallback (F.coalesce; single-value dictionaries only), exact (False
+    → dictionary keys are regexes, first match wins — a plan-time
+    when-chain of rlike tests). Exact keys go through
+    ``snapshot_lookup``: a literal map up to ``MAP_LITERAL_MAX``
+    entries, a broadcast join above it or for a DataFrame, and a
+    duplicate DataFrame key takes its smallest value. Lookup-miss with
+    no fallback leaves target null (reference leaves the field unset)
+    and optionally tags ``tag_on_miss``.
     """
 
     def _targets(self, df: DataFrame) -> list[str] | None:
@@ -101,56 +151,37 @@ class TranslateStage(Stage):
         target = self.conf.get("target", "translation")
         fallback = self.conf.get("fallback")
         src = field_col(source)
+        tmp = "__translation"
 
         if "dictionary" in self.conf or "dictionary_path" in self.conf:
-            d: dict = (
+            snap: dict | DataFrame = (
                 self.conf["dictionary"]
                 if "dictionary" in self.conf
                 else load_dictionary_file(self.conf["dictionary_path"])
             )
-            if not self.conf.get("exact", True):
-                # regex-key mode: ordered rlike when-chain (keys are few;
-                # each is one codegen'd regexp test)
-                chain = None
-                for k, v in d.items():
-                    cond = src.rlike(str(k))
-                    chain = (
-                        F.when(cond, F.lit(v)) if chain is None else chain.when(cond, F.lit(v))
-                    )
-                val = chain if chain is not None else F.lit(None).cast("string")
-                matched = val.isNotNull()
-                if fallback is not None:
-                    val = F.coalesce(val, F.lit(fallback))
-                df = df.withColumn(target, val)
-                tag_on_miss = self.conf.get("tag_on_miss")
-                if tag_on_miss:
-                    df = add_tags(df, [tag_on_miss], src.isNotNull() & ~matched)
-                return df, matched
-            m = F.create_map(*[x for k, v in d.items() for x in (F.lit(k), F.lit(v))])
-            val = m[src]
-            if fallback is not None:
-                val = F.coalesce(val, F.lit(fallback))
-            matched = m[src].isNotNull()
-            df = df.withColumn(target, val)
         else:
-            dim: DataFrame = self.conf["dictionary_df"]
-            key, *vals = dim.columns
-            if len(vals) == 1:
-                dim2 = dim.withColumnRenamed(vals[0], target)
-                out_cols = [target]
-            else:
-                # multi-column dictionary → one struct column (jdbc_static-style)
-                dim2 = dim.select(F.col(key), F.struct(*vals).alias(target))
-                out_cols = [target]
-            dim2 = dim2.withColumnRenamed(key, "__dict_key")
-            df = df.join(F.broadcast(dim2), src == F.col("__dict_key"), "left").drop("__dict_key")
-            matched = F.col(target).isNotNull()
-            if fallback is not None and len(vals) == 1:
-                df = df.withColumn(target, F.coalesce(F.col(target), F.lit(fallback)))
-        tag_on_miss = self.conf.get("tag_on_miss")
-        if tag_on_miss:
-            df = add_tags(df, [tag_on_miss], src.isNotNull() & ~matched)
-        return df, matched
+            snap = self.conf["dictionary_df"]
+            key, *vals = snap.columns
+            if len(vals) > 1:
+                # multi-column dictionary → one struct value (jdbc_static-style)
+                snap = snap.select(F.col(key), F.struct(*vals))
+                fallback = None
+        if isinstance(snap, DataFrame) or self.conf.get("exact", True):
+            df = snapshot_lookup(df, src, snap, tmp)
+        else:
+            # regex-key mode: ordered rlike when-chain (keys are few;
+            # each is one codegen'd regexp test)
+            chain = None
+            for k, v in snap.items():
+                cond = src.rlike(str(k))
+                chain = F.when(cond, F.lit(v)) if chain is None else chain.when(cond, F.lit(v))
+            df = df.withColumn(tmp, chain if chain is not None else F.lit(None).cast("string"))
+        # predicates before the target write: target may be the source
+        df = df.withColumn("__matched", F.col(tmp).isNotNull())
+        df = add_tags(df, _as_list(self.conf.get("tag_on_miss")),
+                      src.isNotNull() & ~F.col("__matched"))
+        val = F.col(tmp) if fallback is None else F.coalesce(F.col(tmp), F.lit(fallback))
+        return df.withColumn(target, val).drop(tmp), F.col("__matched")
 
 
 @register("geoip")
@@ -170,6 +201,7 @@ class GeoipStage(Stage):
     """
 
     AUTO_THRESHOLD = 2000
+    FAILURE_TAG = "_geoip_lookup_failure"
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "geo"), "tags"]
@@ -244,10 +276,7 @@ class GeoipStage(Stage):
                 target, F.when(F.col(f"{target}.country").isNotNull(), F.col(target))
             )
         matched = F.col(f"{target}.country").isNotNull()
-        df = add_tags(
-            df, self.conf.get("tag_on_failure", ["_geoip_lookup_failure"]),
-            src_ip.isNotNull() & ~matched,
-        )
+        df = add_tags(df, self.failure_tags, src_ip.isNotNull() & ~matched)
         return df, matched
 
 
@@ -395,7 +424,7 @@ class DnsStage(Stage):
         resolved value appended) | "replace" (scalar swap in place)
       hosts: inline {name: address} dict  |  hosts_path: /etc/hosts-
         format file (plan-time load)  |  hosts_df: DataFrame whose first
-        two columns are (name, address) → broadcast hash join
+        two columns are (name, address)
       tag_on_miss: optional tag when any requested lookup misses
         (engine extension; dns.rb's only failure tag is
         ``tag_on_timeout``, meaningless without a live resolver)
@@ -405,20 +434,23 @@ class DnsStage(Stage):
     live lookup inside a distributed job is non-deterministic,
     rate-limited, and a per-row blocking syscall, so this stage takes
     the resolution table as an explicit **broadcast snapshot** (the
-    same pattern as translate/jdbc_static): dict/hosts file → plan-time
-    ``create_map`` literal (zero joins, whole-stage codegen); DataFrame
-    → broadcast hash join, no shuffle on the fact side. Snapshot
-    refresh cadence is per micro-batch run, exactly like translate's
-    ``refresh_interval`` equivalence. Per dns.rb, a failed lookup
-    leaves the field unchanged and the filter only counts as matched
-    (common options applied) when ALL requested lookups succeed.
-    Typed-column note for ``append``: Spark columns are uniformly
-    typed, so append mode casts the field to array<string> for every
-    row — hit → [original, resolved], miss → [original] (the reference
-    leaves misses scalar; documented deviation).
+    same pattern as translate/jdbc_static), looked up through
+    ``snapshot_lookup``: a dict/hosts file of at most
+    ``MAP_LITERAL_MAX`` entries → plan-time ``create_map`` literal,
+    larger or a DataFrame → broadcast hash join, no shuffle on the fact
+    side. Forward keys are case-folded names. The reverse table of a
+    dict/hosts file keeps the first name per address (resolver order)
+    at any size; a ``hosts_df`` name or address listed twice resolves
+    to the smallest value. Snapshot refresh cadence is per micro-batch
+    run, exactly like translate's ``refresh_interval`` equivalence. Per
+    dns.rb, a failed lookup leaves the field unchanged and the filter
+    only counts as matched (common options applied) when ALL requested
+    lookups succeed. Typed-column note for ``append``: Spark columns
+    are uniformly typed, so append mode casts the field to
+    array<string> for every row — hit → [original, resolved], miss →
+    [original] (the reference leaves misses scalar; documented
+    deviation).
     """
-
-    MAP_LITERAL_MAX = 10_000  # above this, dict snapshots become a broadcast join
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         out = [field_name(f) for f in
@@ -445,63 +477,21 @@ class DnsStage(Stage):
 
         snap = self._snapshot()
         hosts_df: DataFrame | None = self.conf.get("hosts_df")
-        if snap is None and hosts_df is None:
+        if snap is not None:
+            rev: dict[str, str] = {}
+            for name, addr in snap.items():
+                rev.setdefault(addr, name)
+            tables = {"fwd": snap, "rev": rev}
+        elif hosts_df is not None:
+            name_c, addr_c = hosts_df.columns[:2]
+            tables = {"fwd": hosts_df.select(F.lower(F.col(name_c)), F.col(addr_c)),
+                      "rev": hosts_df.select(F.col(addr_c), F.col(name_c))}
+        else:
             raise ValueError(
                 "dns: a resolution snapshot is required (hosts / hosts_path / "
                 "hosts_df) — live resolvers are per-row blocking syscalls and "
                 "non-deterministic across executors; snapshot-join instead"
             )
-        # big dict/file snapshots auto-switch to the broadcast-join path:
-        # a create_map literal embeds the whole table in the plan, which
-        # is right for small dims but bloats analysis k× at tens of
-        # thousands of entries
-        if snap is not None and len(snap) > self.MAP_LITERAL_MAX:
-            hosts_df = df.sparkSession.createDataFrame(
-                list(snap.items()), "name string, address string"
-            )
-            snap = None
-
-        # one map expression PER DIRECTION, shared by every field that
-        # looks that direction up (not one per field)
-        map_cache: dict[str, Column | None] = {}
-
-        def _direction_map(direction: str) -> Column | None:
-            if direction not in map_cache:
-                table = snap if direction == "fwd" else {
-                    v: k for k, v in reversed(list(snap.items()))
-                }
-                map_cache[direction] = F.create_map(
-                    *[x for k, v in table.items() for x in (F.lit(k), F.lit(v))]
-                ) if table else None
-            return map_cache[direction]
-
-        def lookup(src: Column, direction: str, i: int) -> tuple[Column, str | None]:
-            """Returns (resolved-value column, tmp-column-to-drop|None).
-            Forward lowers the name through lower() (DNS names are
-            case-insensitive); reverse keys on the address verbatim."""
-            nonlocal df
-            key = F.lower(src) if direction == "fwd" else src
-            if snap is not None:
-                m = _direction_map(direction)
-                if m is None:
-                    return F.lit(None).cast("string"), None
-                return m[key], None
-            name_c, addr_c = hosts_df.columns[:2]
-            k_col, v_col = (
-                (F.lower(F.col(name_c)), F.col(addr_c)) if direction == "fwd"
-                else (F.col(addr_c), F.col(name_c))
-            )
-            tmp = f"__dns_{direction}_{i}"
-            # duplicate keys in the hosts snapshot pick min(value) — a
-            # DETERMINISTIC winner (F.first over an unordered groupBy is
-            # retry/replay-nondeterministic; same hazard the es filter's
-            # window pick avoids)
-            dim = (
-                hosts_df.select(k_col.alias(tmp + "_k"), v_col.alias(tmp + "_v"))
-                .groupBy(tmp + "_k").agg(F.min(tmp + "_v").alias(tmp + "_v"))
-            )
-            df = df.join(F.broadcast(dim), key == F.col(tmp + "_k"), "left").drop(tmp + "_k")
-            return F.col(tmp + "_v"), tmp + "_v"
 
         all_hit = F.lit(True)
         any_requested_miss = F.lit(False)
@@ -511,9 +501,12 @@ class DnsStage(Stage):
             [(f, "fwd") for f in resolve] + [(f, "rev") for f in reverse]
         ):
             src = field_col(field)
-            val, tmp = lookup(src, direction, i)
-            if tmp is not None:
-                drops.append(tmp)
+            # DNS names are case-insensitive; addresses key verbatim
+            key = F.lower(src) if direction == "fwd" else src
+            tmp = f"__dns_{i}"
+            df = snapshot_lookup(df, key, tables[direction], tmp)
+            drops.append(tmp)
+            val = F.col(tmp)
             hit = val.isNotNull()
             all_hit = all_hit & (src.isNull() | hit)
             any_requested_miss = any_requested_miss | (src.isNotNull() & ~hit)
@@ -531,12 +524,8 @@ class DnsStage(Stage):
         )
         for name, col in writes:
             df = df.withColumn(name, col)
-        for d in drops:
-            df = df.drop(d)
-        tag_on_miss = self.conf.get("tag_on_miss")
-        if tag_on_miss:
-            df = add_tags(df, [tag_on_miss], F.col("__dns_miss"))
-        return df.drop("__dns_miss"), F.col("__matched")
+        df = add_tags(df, _as_list(self.conf.get("tag_on_miss")), F.col("__dns_miss"))
+        return df.drop("__dns_miss", *drops), F.col("__matched")
 
 
 @register("tld")
@@ -777,8 +766,8 @@ class JdbcStreamingStage(Stage):
             )
             out = add_tags(
                 out,
-                list(self.conf.get("tag_on_default_use",
-                                   ["_jdbcstreamingdefaultsused"])),
+                _as_list(self.conf.get("tag_on_default_use",
+                                       "_jdbcstreamingdefaultsused")),
                 ~F.col("__matched"),
             )
         return out, F.col("__matched")
@@ -1063,7 +1052,7 @@ class ElasticsearchStage(Stage):
     ``tag_on_failure`` default).
     """
 
-    TAG = "_elasticsearch_lookup_failure"
+    FAILURE_TAG = "_elasticsearch_lookup_failure"
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [field_name(t) for t in self.conf.get("fields", {}).values()] + ["tags"]
@@ -1108,20 +1097,7 @@ class ElasticsearchStage(Stage):
         else:
             order = []
         # tiebreak only on ORDERABLE columns: a map-typed column (legal in
-        # an ES export) cannot appear in an ORDER BY — Spark's rule is
-        # map → never orderable; array/struct → orderable iff their
-        # element/field types are.
-        from pyspark.sql import types as T
-
-        def _orderable(dt) -> bool:
-            if isinstance(dt, T.MapType):
-                return False
-            if isinstance(dt, T.ArrayType):
-                return _orderable(dt.elementType)
-            if isinstance(dt, T.StructType):
-                return all(_orderable(f.dataType) for f in dt.fields)
-            return True
-
+        # an ES export) cannot appear in an ORDER BY
         tiebreak = [
             q(f.name)
             for f in index_df.schema.fields
@@ -1159,11 +1135,7 @@ class ElasticsearchStage(Stage):
             )
             out = out.withColumn(field_name(target), src)
         out = out.drop("__es_hit", *probes.values())
-        out = add_tags(
-            out,
-            list(self.conf.get("tag_on_failure", [self.TAG])),
-            ~F.col("__matched"),
-        )
+        out = add_tags(out, self.failure_tags, ~F.col("__matched"))
         return out, F.col("__matched")
 
 
@@ -1181,16 +1153,16 @@ class MemcachedStage(Stage):
     per-event network I/O against a live cache inside a distributed job
     is non-deterministic and a per-row blocking syscall, so the cache
     contents come in as an explicit **broadcast snapshot**
-    (``snapshot`` inline dict → plan-time ``create_map`` literal, zero
-    joins; ``snapshot_df`` (key,value) DataFrame → broadcast hash join,
-    fact side unshuffled; dicts above ``MAP_LITERAL_MAX`` auto-switch
-    to the join). The reference's ``set`` direction is a side-effect
+    (``snapshot`` inline dict, or ``snapshot_df`` (key, value)
+    DataFrame), and each ``get`` is one ``snapshot_lookup``: a
+    plan-time ``create_map`` literal up to ``MAP_LITERAL_MAX`` entries,
+    a broadcast hash join above it or for a DataFrame (fact side
+    unshuffled), a duplicate snapshot key taking its smallest value.
+    The reference's ``set`` direction is a side-effect
     WRITE into memcached — no batch analog; rejected loudly (route the
     field to a sink instead). Matched ⇔ every requested get hit
     (mirrors the reference's filter_matched-on-full-success).
     """
-
-    MAP_LITERAL_MAX = 10_000
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         out = [field_name(t) for t in self.conf.get("get", {}).values()]
@@ -1211,66 +1183,38 @@ class MemcachedStage(Stage):
         if not gets:
             raise ValueError("memcached: `get` mapping is required")
         ns = self.conf.get("namespace")
-        snap: dict[str, str] | None = self.conf.get("snapshot")
+        snap: dict | None = self.conf.get("snapshot")
         snap_df: DataFrame | None = self.conf.get("snapshot_df")
-        if snap is None and snap_df is None:
+        if snap is not None:
+            table = {str(k): str(v) for k, v in snap.items()}
+        elif snap_df is not None:
+            k_c, v_c = snap_df.columns[:2]
+            table = snap_df.select(F.col(k_c).cast("string"), F.col(v_c).cast("string"))
+        else:
             raise ValueError(
                 "memcached: a cache snapshot is required (snapshot / "
                 "snapshot_df) — live memcached I/O inside a distributed "
                 "job is rejected by design (dns/translate precedent)"
             )
-        if snap is not None and len(snap) > self.MAP_LITERAL_MAX:
-            snap_df = df.sparkSession.createDataFrame(
-                [(str(k), str(v)) for k, v in snap.items()],
-                "key string, value string",
-            )
-            snap = None
 
-        lookup_map = (
-            F.create_map(*[x for k, v in snap.items()
-                           for x in (F.lit(str(k)), F.lit(str(v)))])
-            if snap else None
-        )
         all_hit = F.lit(True)
-        writes: list[tuple[str, Column]] = []
-        drops: list[str] = []
+        writes: list[tuple[str, str]] = []
         for i, (key_tmpl, target) in enumerate(gets.items()):
             key = sprintf_col(key_tmpl)
             if ns:
                 key = F.concat(F.lit(f"{ns}:"), key)
-            if lookup_map is not None:
-                val = lookup_map[key]
-            else:
-                tmp = f"__mc_{i}"
-                k_c, v_c = snap_df.columns[:2]
-                # dedupe duplicate snapshot keys DETERMINISTICALLY (min)
-                dim = (
-                    snap_df.select(F.col(k_c).cast("string").alias(tmp + "_k"),
-                                   F.col(v_c).cast("string").alias(tmp + "_v"))
-                    .groupBy(tmp + "_k").agg(F.min(tmp + "_v").alias(tmp + "_v"))
-                )
-                df = df.join(F.broadcast(dim), key == F.col(tmp + "_k"), "left")
-                drops.append(tmp + "_k")
-                val = F.col(tmp + "_v")
-                drops.append(tmp + "_v")
-            writes.append((field_name(target), val))
-            all_hit = all_hit & val.isNotNull()
-        for name, val in writes:
-            df = df.withColumn(name, val)
+            tmp = f"__mc_{i}"
+            df = snapshot_lookup(df, key, table, tmp)
+            writes.append((field_name(target), tmp))
+            all_hit = all_hit & F.col(tmp).isNotNull()
         df = df.withColumn("__matched", all_hit)
-        if drops:
-            df = df.drop(*drops)
-        tag_miss = self.conf.get("tag_on_miss")
-        if tag_miss:
-            df = add_tags(df, [tag_miss] if isinstance(tag_miss, str)
-                          else list(tag_miss), ~F.col("__matched"))
+        for name, tmp in writes:
+            df = df.withColumn(name, F.col(tmp))
+        df = df.drop(*[tmp for _, tmp in writes])
+        df = add_tags(df, _as_list(self.conf.get("tag_on_miss")), ~F.col("__matched"))
         # reference option: tag rows where EVERY get hit (default none)
-        tag_ok = self.conf.get("tag_on_success")
-        if tag_ok:
-            df = add_tags(df, [tag_ok] if isinstance(tag_ok, str)
-                          else list(tag_ok), F.col("__matched"))
-        out_matched = F.col("__matched")
-        return df, out_matched
+        df = add_tags(df, _as_list(self.conf.get("tag_on_success")), F.col("__matched"))
+        return df, F.col("__matched")
 
 
 @register("http")
@@ -1309,7 +1253,8 @@ class HttpStage(Stage):
     precedent; route events to a sink instead).
     """
 
-    TAG = "_httprequestfailure"
+    FAILURE_TAG = "_httprequestfailure"
+    FAILURE_OPTION = "tag_on_request_failure"
     DIM_SCHEMA = ("__http_url string, __http_status int, "
                   "__http_body string, __http_headers map<string,string>")
 
@@ -1333,10 +1278,6 @@ class HttpStage(Stage):
             )
         target_body = field_name(self.conf.get("target_body", "body"))
         target_headers = self.conf.get("target_headers")
-        tf = self.conf.get("tag_on_request_failure", [self.TAG])
-        # LSCL delivers a bare string; list("_fail") would explode it
-        # into per-character tags
-        tag_fail = [tf] if isinstance(tf, str) else list(tf)
         max_urls = int(self.conf.get("max_distinct_urls", 100_000))
         url_col = sprintf_col(self.conf["url"])
 
@@ -1395,7 +1336,7 @@ class HttpStage(Stage):
         if target_headers:
             df = df.withColumn(
                 field_name(target_headers), F.when(ok, F.col("__http_headers")))
-        df = add_tags(df, tag_fail, ~ok)
+        df = add_tags(df, self.failure_tags, ~ok)
         df = df.withColumn("__matched", ok).drop(
             "__http_url", "__http_status", "__http_body", "__http_headers")
         return df, F.col("__matched")
@@ -1583,10 +1524,7 @@ class WurflStage(Stage):
         df = df.withColumn(target, _wurfl(field_col(source)))
         matched = F.col(target)["device_id"].isNotNull()
         df = df.withColumn(target, F.when(matched, F.col(target)))
-        tag_miss = self.conf.get("tag_on_miss")
-        if tag_miss:
-            df = add_tags(df, [tag_miss] if isinstance(tag_miss, str)
-                          else list(tag_miss), ~matched)
+        df = add_tags(df, _as_list(self.conf.get("tag_on_miss")), ~matched)
         return df, matched
 
 

@@ -66,6 +66,8 @@ class GrokStage(Stage):
     whole-stage-codegen JVM path, no Python at all.
     """
 
+    FAILURE_TAG = GROK_FAILURE_TAG
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         from ..grok import compile_grok
 
@@ -91,7 +93,6 @@ class GrokStage(Stage):
         defs = self.conf.get("pattern_definitions")
         target = self.conf.get("target")
         overwrite = self.conf.get("overwrite", [])
-        tags = self.conf.get("tag_on_failure", [GROK_FAILURE_TAG])
 
         lowered = lower_multi_capture(patterns[0], defs) if (
             len(patterns) == 1
@@ -130,7 +131,7 @@ class GrokStage(Stage):
                 target,
                 overwrite,
             )
-        df = add_tags(df, tags, ~F.col(_MATCHED))
+        df = add_tags(df, self.failure_tags, ~F.col(_MATCHED))
         return df, F.col(_MATCHED)
 
 
@@ -140,6 +141,8 @@ class DissectStage(Stage):
 
     conf: mapping {source: dissect_spec}, tag_on_failure.
     """
+
+    FAILURE_TAG = DISSECT_FAILURE_TAG
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         if self.conf.get("target"):
@@ -162,7 +165,7 @@ class DissectStage(Stage):
             self.conf.get("target"),
             self.conf.get("overwrite", []),
         )
-        df = add_tags(df, self.conf.get("tag_on_failure", [DISSECT_FAILURE_TAG]), ~F.col(_MATCHED))
+        df = add_tags(df, self.failure_tags, ~F.col(_MATCHED))
         return df, F.col(_MATCHED)
 
 
@@ -237,6 +240,8 @@ class JsonStage(Stage):
     column is never destroyed).
     """
 
+    FAILURE_TAG = "_jsonparsefailure"
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         if self.conf.get("schema"):
             tgt = self.conf.get("target") or field_name(self.conf.get("source", "message")) + "_parsed"
@@ -262,7 +267,7 @@ class JsonStage(Stage):
             df = df.withColumn(tgt, F.when(parsed.isNotNull(), merged).otherwise(F.col(tgt)))
         else:
             df = df.withColumn(tgt, parsed)
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_jsonparsefailure"]), failure)
+        df = add_tags(df, self.failure_tags, failure)
         return df, matched & src.isNotNull()
 
 
@@ -273,6 +278,8 @@ class CsvStage(Stage):
     conf: source, columns [names] or schema DDL, separator, quote_char,
     target. Native ``F.from_csv`` 1:1.
     """
+
+    FAILURE_TAG = "_csvparsefailure"
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         if self.conf.get("autodetect_column_names"):
@@ -333,8 +340,7 @@ class CsvStage(Stage):
             for fld in [f.strip().split()[0].strip("`") for f in ddl.split(",")]:
                 df = df.withColumn(fld, F.col(f"{tmp}.`{fld}`"))
             df = df.drop(tmp)
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_csvparsefailure"]),
-                      src.isNotNull() & ~matched)
+        df = add_tags(df, self.failure_tags, src.isNotNull() & ~matched)
         return df, matched
 
 
@@ -344,9 +350,12 @@ class XmlStage(Stage):
 
     conf: source, target, schema (DDL — the reference's ``xpath``
     extraction maps to selecting struct fields from the parsed value),
-    tag_on_failure default ``_xmlparsefailure``. Native ``F.from_xml``
-    (Spark 4) — JVM-side, no Python.
+    tag_on_failure default ``_xmlparsefailure``: malformed XML, or a
+    value that does not fit the schema, leaves target null and tags the
+    event. Native ``F.from_xml`` (Spark 4) — JVM-side, no Python.
     """
+
+    FAILURE_TAG = "_xmlparsefailure"
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "xml"), "tags"]
@@ -356,12 +365,16 @@ class XmlStage(Stage):
         schema = self.conf["schema"]
         target = self.conf.get("target", "xml")
         src = field_col(source)
-        parsed = F.from_xml(src, schema)
-        df = df.withColumn(target, parsed)
-        matched = src.isNotNull() & parsed.isNotNull()
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_xmlparsefailure"]),
-                      src.isNotNull() & ~matched)
-        return df, matched
+        # from_xml never returns null for a non-null string; malformed
+        # input (or a value that does not fit the schema) shows up in
+        # the corrupt-record field instead
+        bad = "__xml_corrupt"
+        df = df.withColumn("__xml", F.from_xml(
+            src, f"{schema}, {bad} string", {"columnNameOfCorruptRecord": bad}))
+        df = df.withColumn(_MATCHED, src.isNotNull() & F.col(f"__xml.{bad}").isNull())
+        df = add_tags(df, self.failure_tags, src.isNotNull() & ~F.col(_MATCHED))
+        parsed = F.when(F.col(_MATCHED), F.col("__xml").dropFields(bad))
+        return df.withColumn(target, parsed).drop("__xml"), F.col(_MATCHED)
 
 
 # Joda (reference) → java.time (Spark) pattern translation. The shared
@@ -393,6 +406,8 @@ class DateStage(Stage):
     whole query in round 1.
     """
 
+    FAILURE_TAG = "_dateparsefailure"
+
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "event_ts"), "tags"]
 
@@ -421,8 +436,7 @@ class DateStage(Stage):
             df = df.withColumn(target, F.when(matched, parsed).otherwise(F.col(target)))
         else:
             df = df.withColumn(target, parsed)
-        df = add_tags(df, self.conf.get("tag_on_failure", ["_dateparsefailure"]),
-                      src.isNotNull() & ~matched)
+        df = add_tags(df, self.failure_tags, src.isNotNull() & ~matched)
         return df, matched
 
 
@@ -449,7 +463,7 @@ class CefStage(Stage):
     ``_cefparsefailure`` tag.
     """
 
-    TAG = "_cefparsefailure"
+    FAILURE_TAG = "_cefparsefailure"
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "cef"), "tags"]
@@ -509,5 +523,5 @@ class CefStage(Stage):
         )
         matched = ok & ver.isNotNull() & (F.size(parts) >= 7)
         df = df.withColumn(target, F.when(matched, struct))
-        df = add_tags(df, [self.TAG], src.isNotNull() & ~matched)
+        df = add_tags(df, self.failure_tags, src.isNotNull() & ~matched)
         return df, matched

@@ -90,6 +90,52 @@ def test_condition_errors_report_offset():
         to_pipeline_spec("filter { if")
 
 
+BARE_STRING_CONF = r"""
+filter {
+  mutate { remove_field => "other" add_tag => "seen" }
+  grok {
+    match => { "message" => "^%{WORD:verb} %{INT:code}$" }
+    tag_on_failure => "_badlinefailure"
+  }
+  xml { source => "payload" target => "doc" schema => "t string" }
+}
+output {
+  file { path => "kept" }
+  dead_letter_queue { }
+}
+"""
+
+
+def test_bare_string_list_options_and_failure_census(spark, tmp_path):
+    """LSCL hands a one-element list option over as a bare string:
+    remove_field, add_tag and tag_on_failure each act as that one
+    element (not its characters), the grok failure tag reaches the DLQ,
+    and xml's failures are counted like grok's."""
+    from logstash_spark.pipeline import Pipeline
+
+    src = spark.createDataFrame(
+        [("https://a/1", "GET 200", "x", "<e><t>ok</t></e>"),
+         ("https://a/2", "garbage line", "x", "<e><t>ok</t></e>"),
+         ("https://a/3", "PUT 404", "x", None),
+         ("https://a/4", "PUT 500", "x", "<<<")],
+        "url string, message string, other string, payload string",
+    )
+    run_dir = str(tmp_path / "run")
+    metrics = Pipeline(to_pipeline_spec(BARE_STRING_CONF)).run(src, run_dir, n_buckets=2)
+    kept = spark.read.parquet(f"{run_dir}/kept")
+    assert "other" not in kept.columns
+    assert {r.url: list(r.tags) for r in kept.collect()} == {
+        "https://a/1": ["seen"],
+        "https://a/2": ["seen", "_badlinefailure"],
+        "https://a/3": ["seen"],
+        "https://a/4": ["seen", "_xmlparsefailure"],
+    }
+    dlq = spark.read.parquet(f"{run_dir}/dead_letter").collect()
+    assert {r.url: r.error_reason for r in dlq} == {
+        "https://a/2": "_badlinefailure", "https://a/4": "_xmlparsefailure"}
+    assert {f.id: f.failures for f in metrics.filters} == {"grok": 1, "xml": 1}
+
+
 def test_cli_end_to_end(tmp_path):
     conf = tmp_path / "pipe.conf"
     conf.write_text(CONF)

@@ -42,6 +42,21 @@ def test_translate_broadcast_df(spark):
     assert rows[1].word == "ex" and rows[2].word is None
 
 
+def test_translate_dictionary_df_duplicate_key(spark):
+    """A key listed twice in dictionary_df resolves to its smallest
+    value and never multiplies the event."""
+    dim = spark.createDataFrame(
+        [("x", "zz"), ("x", "ex"), ("y", "why")], "key string, value string"
+    )
+    df = spark.createDataFrame([(1, "x"), (2, "y"), (3, "q")], "id int, code string")
+    out = apply_stage(
+        df, {"translate": {"source": "code", "target": "word", "dictionary_df": dim}}
+    )
+    rows = out.collect()
+    assert len(rows) == 3
+    assert {r.id: r.word for r in rows} == {1: "ex", 2: "why", 3: None}
+
+
 def test_translate_multicolumn_dim(spark):
     dim = spark.createDataFrame(
         [("site1.com", "news", 0.9)], "key string, category string, trust double"
@@ -443,18 +458,39 @@ def test_jdbc_streaming_unbindable_param_is_miss_not_abort(spark, tmp_path):
 
 def test_dns_big_snapshot_autoswitches_to_join(spark):
     """Dict snapshots above MAP_LITERAL_MAX become a broadcast join
-    instead of a plan-literal create_map (plan-size guard)."""
-    from logstash_spark.stages.enrich import DnsStage
+    instead of a plan-literal create_map (plan-size guard), in every
+    stage that looks up through snapshot_lookup."""
+    from logstash_spark.stages.enrich import MAP_LITERAL_MAX
 
     big = {f"h{i}.internal": f"10.{i >> 8}.{i & 255}.1"
-           for i in range(DnsStage.MAP_LITERAL_MAX + 1)}
+           for i in range(MAP_LITERAL_MAX + 1)}
     df = spark.createDataFrame([(1, "h77.internal")], "id int, host string")
-    out = apply_stage(
-        df, {"dns": {"resolve": ["host"], "action": "replace", "hosts": big}}
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # not a 10k-entry map literal
-    assert out.collect()[0].host == "10.0.77.1"
+    for spec, col in [
+        ({"dns": {"resolve": ["host"], "action": "replace", "hosts": big}}, "host"),
+        ({"translate": {"source": "host", "target": "ip", "dictionary": big}}, "ip"),
+        ({"memcached": {"get": {"%{host}": "ip"}, "snapshot": big}}, "ip"),
+    ]:
+        out = apply_stage(df, spec)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, next(iter(spec))  # not a 10k-entry map literal
+        assert out.collect()[0][col] == "10.0.77.1"
+
+
+def test_dns_reverse_answer_independent_of_snapshot_size(spark, monkeypatch):
+    """Two names on one address: the reverse lookup keeps the first
+    mapping (resolver order) whether the snapshot is a map literal or,
+    above the threshold, a broadcast join."""
+    from logstash_spark.stages import enrich
+
+    hosts = {"zeta.example": "10.0.0.1", "alpha.example": "10.0.0.1",
+             "other.example": "10.0.0.2"}
+    df = spark.createDataFrame([(1, "10.0.0.1")], "id int, ip string")
+    conf = {"dns": {"reverse": ["ip"], "action": "replace", "hosts": hosts}}
+    literal = apply_stage(df, conf).collect()[0].ip
+    monkeypatch.setattr(enrich, "MAP_LITERAL_MAX", 1)
+    joined = apply_stage(df, conf)
+    assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
+    assert literal == joined.collect()[0].ip == "zeta.example"
 
 
 def test_elasticsearch_filter_snapshot_join(spark):
