@@ -312,7 +312,8 @@ class Stage:
 
     A stage whose reference plugin tags failed events declares that
     default tag as ``FAILURE_TAG``; ``failure_tags`` is the tag list in
-    effect (the ``FAILURE_OPTION`` conf override, else the default). The
+    effect (the ``FAILURE_OPTION`` conf override, else the default; a
+    ``FAILURE_OPTION`` of None means the tag is fixed). The
     stage tags its failures with it and the pipeline's failure census
     counts it.
     """

@@ -51,18 +51,19 @@ def snapshot_lookup(df: DataFrame, key: Column, snapshot: dict | DataFrame,
     (key, value) DataFrame, becomes a broadcast left join. Duplicate
     DataFrame keys resolve to the smallest value (ordered by ``to_json``
     for types Spark cannot order), so the pick is the same on every run
-    and retry and no event is multiplied."""
+    and retry and no event is multiplied; dict keys are unique already."""
     if isinstance(snapshot, dict):
         if not snapshot:
             return df.withColumn(out, F.lit(None).cast("string"))
         if len(snapshot) <= MAP_LITERAL_MAX:
             m = F.create_map(*[F.lit(x) for kv in snapshot.items() for x in kv])
             return df.withColumn(out, m[key])
-        snapshot = df.sparkSession.createDataFrame(list(snapshot.items()))
-    dim = snapshot.toDF(f"{out}_k", out)
-    val = F.col(out)
-    order = val if _orderable(dim.schema[out].dataType) else F.to_json(val)
-    dim = dim.groupBy(f"{out}_k").agg(F.min_by(val, order).alias(out))
+        dim = df.sparkSession.createDataFrame(list(snapshot.items()), [f"{out}_k", out])
+    else:
+        dim = snapshot.toDF(f"{out}_k", out)
+        val = F.col(out)
+        order = val if _orderable(dim.schema[out].dataType) else F.to_json(val)
+        dim = dim.groupBy(f"{out}_k").agg(F.min_by(val, order).alias(out))
     return df.join(F.broadcast(dim), key == F.col(f"{out}_k"), "left").drop(f"{out}_k")
 
 

@@ -351,8 +351,9 @@ class XmlStage(Stage):
     conf: source, target, schema (DDL — the reference's ``xpath``
     extraction maps to selecting struct fields from the parsed value),
     tag_on_failure default ``_xmlparsefailure``: malformed XML, or a
-    value that does not fit the schema, leaves target null and tags the
-    event. Native ``F.from_xml`` (Spark 4) — JVM-side, no Python.
+    value that does not fit the schema, tags the event; target keeps
+    the fields that did parse. Native ``F.from_xml`` (Spark 4) —
+    JVM-side, no Python.
     """
 
     FAILURE_TAG = "_xmlparsefailure"
@@ -373,8 +374,8 @@ class XmlStage(Stage):
             src, f"{schema}, {bad} string", {"columnNameOfCorruptRecord": bad}))
         df = df.withColumn(_MATCHED, src.isNotNull() & F.col(f"__xml.{bad}").isNull())
         df = add_tags(df, self.failure_tags, src.isNotNull() & ~F.col(_MATCHED))
-        parsed = F.when(F.col(_MATCHED), F.col("__xml").dropFields(bad))
-        return df.withColumn(target, parsed).drop("__xml"), F.col(_MATCHED)
+        df = df.withColumn(target, F.col("__xml").dropFields(bad)).drop("__xml")
+        return df, F.col(_MATCHED)
 
 
 # Joda (reference) → java.time (Spark) pattern translation. The shared
@@ -464,6 +465,7 @@ class CefStage(Stage):
     """
 
     FAILURE_TAG = "_cefparsefailure"
+    FAILURE_OPTION = None  # the cef codec's failure tag is fixed
 
     def _targets(self, df: DataFrame) -> list[str] | None:
         return [self.conf.get("target", "cef"), "tags"]

@@ -16,7 +16,8 @@ def test_xml_stage(spark):
     df = spark.createDataFrame(
         [(1, "<e><t>click</t><u>42</u></e>"),
          (2, "<e><t>view</t><u>7</u></e>"),
-         (3, "not xml at all <<<")],
+         (3, "not xml at all <<<"),
+         (4, "<e><t>view</t><u>abc</u></e>")],
         "id int, message string",
     )
     out = apply_stage(
@@ -24,8 +25,13 @@ def test_xml_stage(spark):
     )
     rows = {r["id"]: r for r in out.collect()}
     assert rows[1]["x"]["t"] == "click" and rows[1]["x"]["u"] == 42
-    assert rows[2]["x"]["u"] == 7
+    assert rows[2]["x"]["u"] == 7 and rows[2]["tags"] == []
     assert rows[3]["x"] is None or rows[3]["x"]["t"] is None
+    assert rows[3]["tags"] == ["_xmlparsefailure"]
+    # a value that does not fit the schema is a failure, but the
+    # fields that did parse stay
+    assert rows[4]["x"].asDict() == {"t": "view", "u": None}
+    assert rows[4]["tags"] == ["_xmlparsefailure"]
 
 
 def test_streaming_foreachbatch_e2e(spark, tmp_path):
