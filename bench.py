@@ -221,8 +221,13 @@ def main():
 
     # bench-only heap tuning (not a library default): the local-mode
     # driver JVM hosts all task slots and GC-thrashes at 1g under ≥16
-    # concurrent parquet writers + persisted batches.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # concurrent parquet writers + persisted batches. Half of physical
+    # RAM, capped at 48g (reached on hosts of >= 96 GB).
+    from perfbench.host import driver_heap_mb, meminfo_kb
+
+    heap_mb = driver_heap_mb(
+        meminfo_kb()["MemTotal"], share=0.5, cap_mb=48 * 1024)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = f"local[{cpus}]" if cpus else None
     spark = get_spark(

@@ -21,8 +21,9 @@ into ONE Python regex with named groups; execution is a vectorized
 ``Series.str.extract`` over Arrow batches inside a pandas UDF that
 returns a struct of captures plus a ``_matched`` flag. Multiple
 patterns = first-match-wins: later patterns run only on rows the
-earlier ones missed. Single-pattern specs prefer the native
-``F.regexp_extract`` lowering (``lower_multi_capture``).
+earlier ones missed. A stage with one pattern, no ``target`` and no
+``keep_empty_captures`` prefers the native ``F.regexp_extract``
+lowering (``lower_multi_capture``) when every field has one group.
 """
 
 from __future__ import annotations
@@ -1060,12 +1061,14 @@ def lower_multi_capture(
     JVM (measured ~2× a single vectorized-Python pass at 12 captures in
     steady state, and far cheaper cold: no Python workers, no Arrow).
 
-    Returns None (→ the pandas path) when any field aggregates several
+    GrokStage calls it only for a single pattern with no ``target`` and
+    no ``keep_empty_captures``. Returns None (→ the pandas path) when
+    the pattern has no named captures, any field aggregates several
     groups (same-name alternation needs coalesce-with-append semantics)
     or the expansion carries syntax Java's regex dialect lacks. Dialect
-    caveat (same stance as lower_single_capture, documented SURVEY §7):
-    java.util.regex and Python ``re`` agree on this library's constructs
-    for ASCII input; \\w/\\b differ on non-ASCII letters.
+    caveat (documented SURVEY §7): java.util.regex and Python ``re``
+    agree on this library's constructs for ASCII input; \\w/\\b differ
+    on non-ASCII letters.
     """
     cg = compile_grok(pattern, extra_patterns)
     if not cg.fields:

@@ -106,10 +106,12 @@ def get_spark(
         )
     )
     # Local-mode bench harnesses need a big driver heap (the driver JVM
-    # hosts all 32 task slots; 1g GC-thrashes under concurrent parquet
-    # writers). That's harness tuning, not a product default — bench.py /
-    # scale_bench.py set SPARK_GRAFT_DRIVER_MEM; library consumers get
-    # Spark's normal default. JVM-launch-time setting: first session wins.
+    # hosts all task slots; 1g GC-thrashes under concurrent parquet
+    # writers). That's harness tuning, not a product default — bench.py,
+    # scale_bench.py and ab_fatpages.py default SPARK_GRAFT_DRIVER_MEM to
+    # half of physical RAM capped at 48g (perfbench.host.driver_heap_mb);
+    # library consumers get Spark's normal default. JVM-launch-time
+    # setting: first session wins.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if driver_mem:
         builder = builder.config("spark.driver.memory", driver_mem)

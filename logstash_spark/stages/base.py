@@ -7,8 +7,18 @@ on events the filter matched) plus an ``id``. The per-event
 ``filter(event)`` contract becomes here a per-DataFrame ``transform``
 contract: a stage takes a DataFrame and returns
 ``(DataFrame, matched_predicate | None)``; the base class then applies
-the common options as ``F.when(matched, …)`` column rewrites — the
-uniform success-conditioned wrapper SURVEY §2.4 requires.
+the common options to the matched rows — the uniform
+success-conditioned wrapper SURVEY §2.4 requires.
+
+Writing only the rows where a predicate holds, while every other row
+keeps its values in the typed schema, has ONE implementation here:
+``_conditional_merge``. It lowers both an LSCL ``if`` around a stage
+(``Pipeline.compile``) and a stage's matched-gated common options
+(``Stage.apply``). It pins the predicate in a column before anything
+runs, so an option that rewrites a column the predicate reads (a
+``remove_field`` of the parsed source) cannot flip it for the options
+after it — filters/base.rb likewise runs every option on an event it
+has already matched.
 
 Stages are registered by their Logstash plugin name so a pipeline spec
 reads like a logstash.conf: ``{"grok": {...}}``, ``{"mutate": {...}}``.
@@ -16,12 +26,17 @@ reads like a logstash.conf: ``{"grok": {...}}``, ``{"mutate": {...}}``.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import (
+    ArrayType, MapType, NullType, StructField, StructType,
+)
 
 from ..fieldref import (
-    TAGS_FIELD, field_col, field_name, is_index, sprintf_col,
+    TAGS_FIELD, _canonical, field_col, field_name, is_index, parse_ref,
+    sprintf_col,
 )
 
 STAGE_REGISTRY: dict[str, type["Stage"]] = {}
@@ -52,8 +67,6 @@ def _set_struct_path(col: Column, dtype, path: list[str], val: Column) -> Column
     the reference's ``Event#setField`` creates intermediate hashes
     (logstash-core: ConvertedMap auto-vivification), and — like Ruby —
     overwriting a non-hash intermediate with a hash."""
-    from pyspark.sql.types import StructType
-
     prefix: list[str] = []
     cur = dtype
     for p in path[:-1]:
@@ -72,51 +85,15 @@ def _set_struct_path(col: Column, dtype, path: list[str], val: Column) -> Column
         ".".join(_qseg(p) for p in prefix + [remainder[0]]), inner)
 
 
-def _struct_path_value(dtype, name: str, path: list[str]) -> Column:
-    """The current value at ``path`` inside struct column ``name`` cast
-    to string (sprintf leaf type), or a null string when the path does
-    not fully exist in the schema — used as the type-matched otherwise
-    branch of a conditional nested add_field."""
-    cur = dtype
-    for p in path:
-        if not (isinstance(cur, StructType) and p in cur.fieldNames()):
-            return F.lit(None).cast("string")
-        cur = cur[p].dataType
-    expr = F.col(name)
-    for p in path:
-        expr = expr.getField(p)
-    return expr.cast("string")
-
-
 def _struct_leaf_type(dtype, path: list[str]):
     """The DataType at ``path`` inside struct schema ``dtype``, or None
     when the path does not fully exist."""
-    from pyspark.sql.types import StructType
-
     cur = dtype
     for p in path:
         if not (isinstance(cur, StructType) and p in cur.fieldNames()):
             return None
         cur = cur[p].dataType
     return cur
-
-
-def _existing_nonstruct_intermediate(dtype, path: list[str]) -> str | None:
-    """First intermediate segment of ``path`` that EXISTS in ``dtype``
-    with a non-struct type (so a write through it would overwrite a
-    real value with a vivified struct), or None when every existing
-    intermediate is a struct. Missing segments are fine — vivification
-    creates them without destroying anything."""
-    cur = dtype
-    for p in path[:-1]:
-        if not isinstance(cur, StructType):
-            return None  # parent already non-struct: caught one level up
-        if p not in cur.fieldNames():
-            return None  # missing → vivify, nothing to destroy
-        cur = cur[p].dataType
-        if not isinstance(cur, StructType):
-            return p
-    return None
 
 
 def _map_drop_key(col: Column, key: str) -> Column:
@@ -196,8 +173,6 @@ def set_field(
     that ops like update/gsub apply schema-statically via
     ``field_exists``. Struct/top-level targets ignore the flag (their
     existence IS schema-static, already gated by the caller)."""
-    from ..fieldref import _canonical, parse_ref
-
     parts = _canonical(parse_ref(ref))
     name = parts[0]
     if len(parts) == 1:
@@ -243,12 +218,24 @@ def set_field(
     return df.withColumn(name, inner)
 
 
+def _remove_field(df: DataFrame, ref: str) -> DataFrame:
+    """Remove the field at ``ref`` (reference ``Event#remove``): a top
+    column, one map key or one struct leaf via ``_drop_field_path``. A
+    path absent from the schema is a no-op, as in the reference."""
+    parts = _canonical(parse_ref(ref))
+    if parts[0] not in df.columns:
+        return df
+    top_t = df.schema[parts[0]].dataType
+    if (len(parts) == 1 or (isinstance(top_t, MapType) and len(parts) == 2)
+            or _struct_leaf_type(top_t, parts[1:]) is not None):
+        return _drop_field_path(df, parts)
+    return df
+
+
 def field_exists(df: DataFrame, ref: str) -> bool:
     """Does ``ref`` resolve to an existing column / struct leaf in the
     schema? (reference ``Event#include?`` at plan time — used for the
     'skip when field missing' discipline of update/convert/coerce)."""
-    from ..fieldref import _canonical, parse_ref
-
     parts = _canonical(parse_ref(ref))
     if parts[0] not in df.columns:
         return False
@@ -289,8 +276,6 @@ def _tag_col(t: str) -> Column:
     (``event.tag(event.sprintf(tag))``) — ``add_tag => ["%{type}_ok"]``
     must tag 'apache_ok', not the literal template."""
     if "%{" in t:
-        from ..fieldref import sprintf_col
-
         return sprintf_col(t)
     return F.lit(t)
 
@@ -307,8 +292,176 @@ def add_tags(df: DataFrame, tags: list[str], cond: Column | None = None) -> Data
     return df.withColumn(TAGS_FIELD, col)
 
 
+def _union_struct(old_t, new_t):
+    """Recursive field union of two struct types: new_t's fields first
+    (keeping NEW types on name overlap; nested structs union
+    recursively), then old-only fields appended. Non-struct pairs →
+    new_t. Lets a conditional merge keep values a schema change would
+    otherwise silently drop (nested remove_field)."""
+    if not (isinstance(old_t, StructType) and isinstance(new_t, StructType)):
+        return new_t
+    old_by = {f.name: f for f in old_t.fields}
+    new_names = {f.name for f in new_t.fields}
+    fields = [
+        StructField(
+            f.name,
+            _union_struct(old_by[f.name].dataType, f.dataType)
+            if f.name in old_by else f.dataType,
+            True,
+        )
+        for f in new_t.fields
+    ]
+    fields += [StructField(f.name, f.dataType, True)
+               for f in old_t.fields if f.name not in new_names]
+    return StructType(fields)
+
+
+def _align_to(col, old_t, new_t):
+    """Project a column of schema ``old_t`` into schema ``new_t``:
+    struct-vs-struct recurses field-by-field (fields absent from the
+    old shape → typed null; shared fields keep their values, aligned
+    recursively); non-struct mismatches try_cast (the convert-op
+    discipline: dirty → null, flow on). A null old struct stays a null
+    new struct."""
+    if old_t == new_t:
+        return col
+    if isinstance(old_t, StructType) and isinstance(new_t, StructType):
+        parts = []
+        for f in new_t.fields:
+            if f.name in old_t.fieldNames():
+                parts.append(_align_to(
+                    col.getField(f.name), old_t[f.name].dataType, f.dataType
+                ).alias(f.name))
+            else:
+                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
+        return F.when(col.isNull(), F.lit(None).cast(new_t)).otherwise(
+            F.struct(*parts))
+    def _category(t):
+        for cls in (StructType, ArrayType, MapType):
+            if isinstance(t, cls):
+                return cls
+        return "scalar"
+
+    if isinstance(old_t, NullType):
+        # a void (all-null) backup casts into ANY type while preserving
+        # every (null) value — the refusal below would false-positive
+        return col.try_cast(new_t)
+    if _category(old_t) != _category(new_t):
+        # CROSS-category retype (scalar↔struct/array/map, array↔map…)
+        # has no value-preserving cast: a conditional write (e.g.
+        # `if [x] { mutate { split ... } }`, or a matched-gated
+        # add_field over a complex leaf or through a scalar
+        # intermediate) retyped the column, and unmatched rows cannot
+        # keep their original value in the new type. try_cast would
+        # fail ANALYSIS (opaque DATA_DIFF_TYPES) or silently
+        # null/stringify — refuse loudly instead.
+        raise ValueError(
+            f"conditional stage retypes a column from "
+            f"{old_t.simpleString()} to {new_t.simpleString()}; "
+            "unmatched rows cannot keep the original value in a typed "
+            "schema — write unconditionally or use a different target")
+    return col.try_cast(new_t)
+
+
+def _merge_names(df: DataFrame, targets: list[str]) -> tuple[str, dict[str, str]]:
+    """The condition column and the per-target backup columns of one
+    merge, none of them already in ``df``: a matched-gated stage inside
+    an ``if`` nests one merge in another, and the inner one must not
+    overwrite (then drop) the outer one's columns."""
+    n = 0
+    while True:
+        sfx = f"_{n}" if n else ""
+        cond = f"__when_cond{sfx}"
+        backups = {c: f"__orig{sfx}_{c}" for c in targets if c in df.columns}
+        if not {cond, *backups.values()} & set(df.columns):
+            return cond, backups
+        n += 1
+
+
+def _conditional_merge(
+    df: DataFrame, cond: Column, targets: list[str],
+    fn: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Apply ``fn`` to the rows where ``cond`` holds and keep every other
+    row's values, as column merges on ONE DataFrame (the engine's only
+    conditional-write path):
+
+    1. pin the condition in a column, evaluated against ``df`` — before
+       ``fn`` rewrites any column it reads;
+    2. back up every target column that already exists;
+    3. run ``fn`` over ALL rows (one subtree execution);
+    4. per target: matched rows take ``fn``'s value, others keep the
+       backup (or null for brand-new columns). A target ``fn`` REMOVED
+       outright (a top-level remove_field drops the column) is rebuilt
+       from the backup: null for matched rows — the remove applied to
+       them — and the original value for the rest.
+
+    ``targets`` must name every column ``fn`` writes; a new column
+    outside it fails loudly.
+    """
+    cond_name, backups = _merge_names(df, targets)
+    pre = df.withColumn(cond_name, F.coalesce(cond, F.lit(False)))
+    for c, b in backups.items():
+        pre = pre.withColumn(b, F.col(c))
+    out = fn(pre)
+    # safety net: an under-declared write-set would silently apply its
+    # effects to non-matching rows — fail loudly instead.
+    undeclared = [
+        c for c in out.columns
+        if c not in pre.columns and c not in targets
+    ]
+    if undeclared:
+        raise RuntimeError(
+            f"a conditional write produced undeclared columns {undeclared};"
+            " fix the stage's _targets() declaration")
+    matched = F.col(cond_name)
+    for c in targets:
+        if c in backups:
+            if c in out.columns:
+                # a write that RETYPED the column (nested add_field /
+                # set_field adding a struct key) would make the CASE
+                # branches two different struct types → analysis error;
+                # align the backup into the new shape (missing keys →
+                # null, shared keys keep their original values)
+                new_t = out.schema[c].dataType
+                old_t = pre.schema[backups[c]].dataType
+                ob = F.col(backups[c])
+                _complex = (StructType, ArrayType, MapType)
+                if old_t != new_t and (
+                    isinstance(old_t, _complex)
+                    or isinstance(new_t, _complex)
+                ):
+                    # a write that DROPPED struct fields (nested
+                    # remove_field) must not erase them for UNMATCHED
+                    # rows: align BOTH sides into the union shape —
+                    # matched rows carry null in the dropped slots
+                    # (the engine's documented per-row-removal
+                    # deviation), unmatched rows keep their values
+                    union_t = _union_struct(old_t, new_t)
+                    if union_t != new_t:
+                        out = out.withColumn(
+                            c, _align_to(F.col(c), new_t, union_t))
+                        new_t = union_t
+                    # scalar mismatches (convert double→long) are left
+                    # to Spark's own CASE coercion — same as a branch
+                    # lowering's unionByName would produce
+                    ob = _align_to(ob, old_t, new_t)
+                out = out.withColumn(
+                    c, F.when(matched, F.col(c)).otherwise(ob))
+            else:
+                # the column was dropped (e.g. `if [x] { mutate {
+                # remove_field => [c] } }`): null for matched rows,
+                # backup for the rest
+                out = out.withColumn(c, F.when(~matched, F.col(backups[c])))
+        elif c in out.columns:
+            out = out.withColumn(c, F.when(matched, F.col(c)))
+    return out.drop(cond_name, *backups.values())
+
+
 class Stage:
-    """Base class. Subclasses implement ``transform``.
+    """Base class. Subclasses implement ``transform``; ``apply`` runs it
+    and then the common options on the rows it matched, through the one
+    conditional merge with the matched predicate pinned once.
 
     A stage whose reference plugin tags failed events declares that
     default tag as ``FAILURE_TAG``; ``failure_tags`` is the tag list in
@@ -346,186 +499,60 @@ class Stage:
         would change their semantics, not just their cost."""
         return None
 
+    def _common_targets(self) -> list[str]:
+        """Columns the common options write: the top column of every
+        add_field / remove_field ref, plus tags."""
+        out = [field_name(r) for r in self.add_field]
+        out += [field_name(r) for r in self.remove_field]
+        if self.add_tag or self.remove_tag:
+            out.append(TAGS_FIELD)
+        return list(dict.fromkeys(out))
+
     def conditional_targets(self, df: DataFrame) -> list[str] | None:
         """Full write-set under an LSCL ``if`` wrapper: the stage's own
-        targets plus the common-option targets (add_field/add_tag/
-        remove_field/remove_tag land on columns too). Used by
-        Pipeline.compile to lower ``if cond { stage }`` into
-        when/otherwise column merges on the SINGLE DataFrame — the
-        reference's Dataset#compute memoization equivalent (without it
-        the upstream subtree executes once per conditional branch)."""
+        targets plus the common-option targets. Used by Pipeline.compile
+        to lower ``if cond { stage }`` through ``_conditional_merge`` on
+        the SINGLE DataFrame — the reference's Dataset#compute
+        memoization equivalent (without it the upstream subtree executes
+        once per conditional branch)."""
         own = self._targets(df)
         if own is None:
             return None
-        extra = [field_name(r) for r in self.add_field]
-        extra += [field_name(r) for r in self.remove_field]
-        if self.add_tag or self.remove_tag:
-            extra.append(TAGS_FIELD)
-        return list(dict.fromkeys(list(own) + extra))
+        return list(dict.fromkeys(list(own) + self._common_targets()))
 
     # ---- common-option wrapper (filters/base.rb filter_matched) ------------
-    def apply(self, df: DataFrame) -> DataFrame:
-        out, matched = self.transform(df)
-        if not (self.add_field or self.add_tag or self.remove_field or self.remove_tag):
-            return out.drop("__matched") if "__matched" in out.columns else out
-        from ..fieldref import _canonical, parse_ref
-
-        cond = matched if matched is not None else F.lit(True)
+    def _common_options(self, df: DataFrame) -> DataFrame:
+        """add_field, add_tag, remove_field, remove_tag — in that order,
+        on every row of ``df``, each option seeing the previous ones'
+        writes."""
         for ref, template in self.add_field.items():
-            parts = _canonical(parse_ref(ref))
-            name = parts[0]
-            val = sprintf_col(template)
-            if len(parts) > 1:
-                # nested target: set ONE key inside the struct — a
-                # whole-column write would clobber the siblings and
-                # retype the column (the reference sets only [a][b])
-                if name in out.columns:
-                    top_t = out.schema[name].dataType
-                    if isinstance(top_t, MapType):
-                        # map top ([@metadata][k]): key upsert — both
-                        # CASE branches are the same map type, so the
-                        # conditional form needs no alignment tricks
-                        if len(parts) != 2:
-                            raise ValueError(
-                                f"add_field: {ref!r} targets a key "
-                                f"inside map values of column {name!r}"
-                                " — only single-level key writes are "
-                                "supported")
-                        new = _map_set_key(F.col(name), top_t, parts[1], val)
-                        out = out.withColumn(
-                            name, new if matched is None else
-                            F.when(cond, new).otherwise(F.col(name)))
-                        continue
-                    if not dict(out.dtypes)[name].startswith("struct"):
-                        if matched is None:
-                            # unconditional: event.set parity — Ruby
-                            # overwrites a non-hash top with a hash,
-                            # exactly like set_field/replace do
-                            out = set_field(out, ref, val)
-                            continue
-                        raise ValueError(
-                            f"add_field: {ref!r} targets a nested key "
-                            f"but column {name!r} is not a struct — a "
-                            "conditional write cannot retype it "
-                            "without clobbering unmatched rows")
-                    dtype = out.schema[name].dataType
-                    if matched is not None:
-                        # an existing COMPLEX leaf cannot survive the
-                        # conditional rewrite: the otherwise branch
-                        # must carry the new (string) leaf type, which
-                        # would stringify unmatched rows' struct/array/
-                        # map values (review finding) — refuse loudly
-                        leaf_t = _struct_leaf_type(dtype, parts[1:])
-                        if isinstance(leaf_t, (ArrayType, MapType,
-                                               StructType)):
-                            raise ValueError(
-                                f"add_field: {ref!r} overwrites an "
-                                f"existing {leaf_t.simpleString()} "
-                                "leaf under a conditional — unmatched "
-                                "rows cannot keep the complex value "
-                                "in the retyped column; remove the "
-                                "field first or write unconditionally")
-                        # a conditional write THROUGH an existing
-                        # non-struct intermediate would have to vivify
-                        # it into a struct on every row — destroying
-                        # the original value on rows the filter did NOT
-                        # match (the reference leaves unmatched events
-                        # untouched). A typed column cannot hold both
-                        # shapes; refuse loudly instead of corrupting.
-                        bad = _existing_nonstruct_intermediate(
-                            dtype, parts[1:])
-                        if bad is not None:
-                            raise ValueError(
-                                f"add_field: {ref!r} writes through "
-                                f"[{bad}], which exists with a "
-                                "non-struct type — a conditional write "
-                                "cannot retype it without clobbering "
-                                "unmatched rows; rename the "
-                                "intermediate or write unconditionally")
-                    new = _set_struct_path(F.col(name), dtype, parts[1:], val)
-                    if matched is None:
-                        # unconditional: assign directly — a
-                        # when/otherwise over the original column is a
-                        # CASE WHEN with mismatched struct types the
-                        # moment the path adds a NEW key
-                        out = out.withColumn(name, new)
-                    else:
-                        # conditional: the otherwise branch must carry
-                        # the SAME struct type, so it sets the same
-                        # path — to the pre-existing value (rendered as
-                        # string, matching the sprintf leaf type) when
-                        # the full path already exists, else to null
-                        keep = _struct_path_value(dtype, name, parts[1:])
-                        unset = _set_struct_path(
-                            F.col(name), dtype, parts[1:], keep)
-                        out = out.withColumn(
-                            name, F.when(cond, new).otherwise(unset))
-                else:
-                    inner = val
-                    for p in reversed(parts[1:]):
-                        inner = F.struct(inner.alias(p))
-                    out = out.withColumn(name, F.when(cond, inner))
-            elif name in out.columns:
-                out = out.withColumn(name, F.when(cond, val).otherwise(F.col(name)))
-            else:
-                out = out.withColumn(name, F.when(cond, val))
-        if self.add_tag:
-            out = add_tags(out, self.add_tag, cond)
+            df = set_field(df, ref, sprintf_col(template))
+        df = add_tags(df, self.add_tag)
         for ref in self.remove_field:
-            parts = _canonical(parse_ref(ref))
-            name = parts[0]
-            if name not in out.columns:
-                continue
-            if len(parts) > 1:
-                # nested removal: drop ONE key, keep the siblings
-                top_t = out.schema[name].dataType
-                if isinstance(top_t, MapType) and len(parts) == 2:
-                    filtered = _map_drop_key(F.col(name), parts[1])
-                    out = out.withColumn(
-                        name, filtered if matched is None else
-                        F.when(cond, filtered).otherwise(F.col(name)))
-                    continue
-                if not dict(out.dtypes)[name].startswith("struct"):
-                    continue  # non-struct top → nested key cannot exist
-                leaf_t = _struct_leaf_type(out.schema[name].dataType, parts[1:])
-                if leaf_t is None:
-                    continue  # path absent → reference no-op (dropFields
-                    # on a missing field would fail analysis)
-                dotted = ".".join(_qseg(p) for p in parts[1:])
-                if matched is None:
-                    # _drop_field_path collapses ancestors the removal
-                    # would leave empty (dropFields errors on emptying
-                    # a struct)
-                    out = _drop_field_path(out, parts)
-                else:
-                    # conditional: a CASE over dropped-vs-original is two
-                    # DIFFERENT struct types → analysis error. Null the
-                    # leaf in place instead (typed schemas can't express
-                    # per-row key absence; null is Spark's absent)
-                    leaf = F.col(name)
-                    for p in parts[1:]:
-                        leaf = leaf.getField(p)
-                    nulled = F.col(name).withField(
-                        dotted,
-                        F.when(cond, F.lit(None).cast(leaf_t)).otherwise(leaf))
-                    out = out.withColumn(name, nulled)
-            elif matched is None:
-                out = out.drop(name)
-            else:
-                out = out.withColumn(
-                    name, F.when(cond, F.lit(None).cast(dict(out.dtypes)[name])).otherwise(F.col(name))
-                )
+            df = _remove_field(df, ref)
         if self.remove_tag:
-            out = ensure_tags(out)
-            removed = F.array_except(
+            df = df.withColumn(TAGS_FIELD, F.array_except(
                 F.col(TAGS_FIELD),
-                F.array(*[_tag_col(t) for t in self.remove_tag]))
-            out = out.withColumn(
-                TAGS_FIELD, F.when(cond, removed).otherwise(F.col(TAGS_FIELD))
-            )
-        if "__matched" in out.columns:
-            out = out.drop("__matched")
-        return out
+                F.array(*[_tag_col(t) for t in self.remove_tag])))
+        return df
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        """``transform``, then the common options on the rows it
+        matched. A stage that matches every row (``matched`` None) runs
+        them unconditionally; otherwise ``_conditional_merge`` pins
+        ``matched`` once, before any option runs, and writes the
+        options' targets on the matched rows only."""
+        out, matched = self.transform(df)
+        targets = self._common_targets()
+        if targets:
+            if self.add_tag or self.remove_tag:
+                out = ensure_tags(out)
+            if matched is None:
+                out = self._common_options(out)
+            else:
+                out = _conditional_merge(
+                    out, matched, targets, self._common_options)
+        return out.drop("__matched") if "__matched" in out.columns else out
 
 
 def build_stage(spec: dict | tuple[str, dict]) -> Stage:

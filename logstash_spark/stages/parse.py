@@ -62,8 +62,10 @@ class GrokStage(Stage):
     target, overwrite, tag_on_failure, keep_empty_captures,
     break_on_match (default true = first-match-wins across the pattern
     list; false = every pattern runs, captures accumulate).
-    Single-capture patterns lower to native ``F.regexp_extract`` —
-    whole-stage-codegen JVM path, no Python at all.
+    One pattern with no ``target``, no ``keep_empty_captures`` and one
+    regex group per field lowers to native ``F.regexp_extract`` (see
+    ``lower_multi_capture``) — whole-stage-codegen JVM path, no Python
+    at all; anything else runs the pandas UDF.
     """
 
     FAILURE_TAG = GROK_FAILURE_TAG
@@ -180,10 +182,14 @@ class KvStage(Stage):
     include_brackets (default True: strip one layer of []/()/<> value
     wrappers — documented deviation: kv.rb also lets bracketed values
     contain the field separator, which a split-based parse cannot).
-    Duplicate keys keep the LAST occurrence (MapType holds one value
-    per key; kv.rb's allow_duplicate_values array-collect is a
-    documented deviation). Fully native: ``str_to_map`` +
-    ``map_filter``/``transform_keys``.
+    Only tokens holding ``value_split`` become pairs (kv.rb's scan needs
+    the separator); a line with none is not matched. Duplicate keys keep
+    the LAST occurrence (MapType holds one value per key; kv.rb's
+    allow_duplicate_values array-collect is a documented deviation),
+    folded in like ``_map_set_key`` (drop the key, concat the entry)
+    onto an existing map target's entries, so no ``mapKeyDedupPolicy``
+    is involved. Fully native: ``split`` + ``filter`` + ``aggregate`` +
+    ``map_filter``.
     """
 
     def _targets(self, df: DataFrame) -> list[str] | None:
@@ -198,34 +204,49 @@ class KvStage(Stage):
         def charset_regex(chars: str) -> str:
             return "[" + "".join("\\" + c if c in r"\^]-[" else c for c in chars) + "]"
 
-        m = F.str_to_map(
-            field_col(source), F.lit(charset_regex(field_split)), F.lit(charset_regex(value_split))
-        )
-        if self.conf.get("include_brackets", True):
-            m = F.transform_values(
-                m, lambda k, v: F.regexp_replace(v, r"^[\[\(<]|[\]\)>]$", "")
-            )
-        trim_k = self.conf.get("trim_key")
-        trim_v = self.conf.get("trim_value")
-        if trim_k:
-            m = F.transform_keys(m, lambda k, v: F.regexp_replace(k, f"^{charset_regex(trim_k)}+|{charset_regex(trim_k)}+$", ""))
-        if trim_v:
-            m = F.transform_values(m, lambda k, v: F.regexp_replace(v, f"^{charset_regex(trim_v)}+|{charset_regex(trim_v)}+$", ""))
+        def trim(c: Column, chars: str | None) -> Column:
+            if not chars:
+                return c
+            cs = charset_regex(chars)
+            return F.regexp_replace(c, f"^{cs}+|{cs}+$", "")
+
+        vs = charset_regex(value_split)
+        brackets = self.conf.get("include_brackets", True)
+
+        def pair(t: Column) -> Column:
+            kv = F.split(t, vs, 2)
+            k, v = kv[0], kv[1]
+            if brackets:
+                v = F.regexp_replace(v, r"^[\[\(<]|[\]\)>]$", "")
+            return F.struct(trim(k, self.conf.get("trim_key")).alias("k"),
+                            trim(v, self.conf.get("trim_value")).alias("v"))
+
+        pairs = F.transform(
+            F.filter(F.split(field_col(source), charset_regex(field_split)),
+                     lambda t: t.rlike(vs)),
+            pair)
         include = self.conf.get("include_keys")
         exclude = self.conf.get("exclude_keys")
         if include:
-            m = F.map_filter(m, lambda k, v: k.isin(*include))
+            pairs = F.filter(pairs, lambda p: p["k"].isin(*include))
         if exclude:
-            m = F.map_filter(m, lambda k, v: ~k.isin(*exclude))
-        prefix = self.conf.get("prefix")
-        if prefix:
-            m = F.transform_keys(m, lambda k, v: F.concat(F.lit(prefix), k))
-        matched = field_col(source).isNotNull() & (F.size(F.map_keys(m)) > 0)
-        if target in df.columns and dict(df.dtypes).get(target, "").startswith("map"):
-            merged = F.map_concat(F.coalesce(F.col(target), F.create_map()), m)
-            df = df.withColumn(target, F.when(matched, merged).otherwise(F.col(target)))
-        else:
-            df = df.withColumn(target, F.when(matched, m))
+            pairs = F.filter(pairs, lambda p: ~p["k"].isin(*exclude))
+        prefix = self.conf.get("prefix", "")
+        merge_into = (target in df.columns
+                      and dict(df.dtypes)[target].startswith("map"))
+
+        def put(acc: Column, p: Column) -> Column:
+            key = F.concat(F.lit(prefix), p["k"])
+            return F.map_concat(F.map_filter(acc, lambda k, _: k != key),
+                                F.create_map(key, p["v"]))
+
+        empty = F.create_map().cast("map<string,string>")
+        m = F.aggregate(
+            pairs, F.coalesce(F.col(target), empty) if merge_into else empty, put)
+        matched = field_col(source).isNotNull() & (F.size(pairs) > 0)
+        val = F.when(matched, m)
+        df = df.withColumn(
+            target, val.otherwise(F.col(target)) if merge_into else val)
         return df, matched
 
 

@@ -38,7 +38,12 @@ def main() -> None:
     from logstash_spark.flagship import run_flagship
     from logstash_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    from perfbench.host import driver_heap_mb, meminfo_kb
+
+    # half of physical RAM, capped at 48g (reached on hosts of >= 96 GB)
+    heap_mb = driver_heap_mb(
+        meminfo_kb()["MemTotal"], share=0.5, cap_mb=48 * 1024)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m")
     spark = get_spark(
         "ab_fatpages", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )

@@ -74,8 +74,13 @@ def run_single(
 
 
 def main():
-    # harness-level heap tuning (inherited by --single subprocesses)
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # harness-level heap tuning (inherited by --single subprocesses):
+    # half of physical RAM, capped at 48g (reached on hosts of >= 96 GB)
+    from perfbench.host import driver_heap_mb, meminfo_kb
+
+    heap_mb = driver_heap_mb(
+        meminfo_kb()["MemTotal"], share=0.5, cap_mb=48 * 1024)
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m")
     if len(sys.argv) > 1 and sys.argv[1] == "--single":
         run_single(int(sys.argv[2]), sys.argv[3], int(sys.argv[4]), sys.argv[5],
                    sys.argv[6])

@@ -253,8 +253,7 @@ def test_conditional_merge_equals_branch_semantics(spark):
     from pyspark.sql import functions as F
 
     from logstash_spark.conditions import compile_condition
-    from logstash_spark.pipeline import _conditional_merge
-    from logstash_spark.stages.base import build_stage
+    from logstash_spark.stages.base import _conditional_merge, build_stage
 
     df = spark.createDataFrame(
         [(i, "en" if i % 2 else "de",
@@ -283,13 +282,20 @@ def test_conditional_merge_equals_branch_semantics(spark):
         {"mutate": {"add_field": {"note": "%{lang}!"}, "add_tag": ["seen"]}},
         {"mutate": {"remove_field": ["csvmsg"]}},
         {"urldecode": {"field": "message", "remove_field": ["jsonmsg"]}},
+        # matched-gated common options: a merge nested in the if merge
+        {"grok": {"match": {"message": "id=%{INT:gid} k=v1"},
+                  "add_field": {"[n][a]": "%{gid}", "[n][b]": "x"},
+                  "add_tag": ["g", "h"], "remove_field": ["[n][a]", "csvmsg"],
+                  "remove_tag": ["h"]}},
+        {"json": {"source": "jsonmsg", "schema": "k int", "target": "jp",
+                  "remove_field": ["jsonmsg", "csvmsg"], "add_tag": ["j"]}},
     ]
     for spec in specs:
         stage = build_stage(spec)
         cond = compile_condition(when, df)
         targets = stage.conditional_targets(df)
         assert targets is not None, spec
-        merged = _conditional_merge(df, stage, cond, targets)
+        merged = _conditional_merge(df, cond, targets, stage.apply)
         branch_stage = build_stage(spec)
         naive = branch_stage.apply(df.filter(cond)).unionByName(
             df.filter(~F.coalesce(cond, F.lit(False))), allowMissingColumns=True

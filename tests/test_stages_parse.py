@@ -131,6 +131,46 @@ def test_kv_include_exclude_prefix(spark):
     assert out.collect()[0].kvout == {"p_a": "1"}
 
 
+def test_kv_duplicate_key_last_wins_and_bare_tokens(spark):
+    """kv.rb: a repeated key keeps the last value, and a token without
+    the value separator yields no pair — a line of only such tokens is
+    not matched, so the common options do not fire. A key the map
+    target already holds is overwritten, not duplicated."""
+    df = spark.createDataFrame(
+        [(1, "a=1 a=2", None), (2, "a=1 zzz", None), (3, "zzz", None),
+         (4, "a=1", {"a": "0", "b": "0"})],
+        "id int, message string, attrs map<string,string>")
+    out = apply_stage(df, {"kv": {"source": "message", "add_tag": ["kv_ok"]}})
+    rows = {r.id: (r.attrs, r.tags) for r in out.collect()}
+    assert rows == {
+        1: ({"a": "2"}, ["kv_ok"]),
+        2: ({"a": "1"}, ["kv_ok"]),
+        3: (None, []),
+        4: ({"a": "1", "b": "0"}, ["kv_ok"]),
+    }
+
+
+@pytest.mark.parametrize("parser,parsed,unparsed", [
+    ("json", '{"x": 1}', "{bad"),
+    ("kv", "a=1", None),
+])
+def test_matched_gated_options_see_the_pinned_predicate(spark, parser, parsed, unparsed):
+    """filters/base.rb runs every common option on an event the filter
+    already matched: removing the parsed source must not unmatch the
+    row for the remove_field / remove_tag options after it."""
+    df = spark.createDataFrame(
+        [(1, parsed, "o1", ["_pending"]), (2, unparsed, "o2", ["_pending"])],
+        "id int, message string, other string, tags array<string>")
+    out = apply_stage(df, {parser: {
+        "source": "message", "remove_field": ["message", "other"],
+        "remove_tag": ["_pending"]}})
+    rows = {r.id: r for r in out.collect()}
+    assert rows[1].message is None and rows[1].other is None
+    assert "_pending" not in rows[1].tags
+    assert rows[2].message == unparsed and rows[2].other == "o2"
+    assert rows[2].tags[0] == "_pending"
+
+
 def test_json_stage(spark):
     df = spark.createDataFrame(
         [(1, '{"user": "alice", "n": "5"}'), (2, "{invalid"), (3, None)],
